@@ -30,7 +30,12 @@ def persist_bounded(slot: str, df: DataFrame) -> DataFrame:
         key = id(df)
     prev = _LAST_PERSISTED.get(slot)
     if prev is not None and prev[0] != key:
-        prev[1].unpersist(blocking=False)
+        try:
+            prev[1].unpersist(blocking=False)
+        except Exception:
+            # the entry belongs to a stopped or replaced session: there
+            # is nothing left to release, and the slot is reused below
+            pass
     out = df.persist()
     _LAST_PERSISTED[slot] = (key, out)
     return out

@@ -275,6 +275,19 @@ def _cm_phys_map(meta: dict) -> dict[str, str]:
     }
 
 
+def _declared_schema(meta: dict):
+    """The table schema metaData.schemaString declares, every field
+    nullable and without field metadata -- what Spark infers from the
+    footers of files this client wrote. Handing it to the parquet reader
+    spares the footer-inference job a bare ``spark.read.parquet`` starts."""
+    from pyspark.sql.types import StructField, StructType
+
+    declared = StructType.fromJson(json.loads(meta["schemaString"]))
+    return StructType(
+        [StructField(f.name, f.dataType, True) for f in declared.fields]
+    )
+
+
 def _version_at_timestamp(table: str, ts_ms: int) -> int:
     """Latest version whose commit timestamp (commitInfo.timestamp,
     falling back to the commit file's mtime) is <= ts_ms. Errors when
@@ -512,6 +525,11 @@ def delta_scan(
             # post-update files carry the materialized _row_id column
             # the originals lack: merge so it is visible table-wide
             rdr = rdr.option("mergeSchema", "true")
+        elif not _cm_phys_map(meta):
+            # the log declares the schema (partition columns included,
+            # typed as declared): no footer-inference job. Column-mapped
+            # files carry physical names, so those reads still infer.
+            rdr = rdr.schema(_declared_schema(meta))
         if all(os.path.abspath(p).startswith(root) for p in paths):
             df = rdr.option("basePath", table).parquet(*paths)
         else:
@@ -1799,15 +1817,18 @@ def _raw_tagged(spark: SparkSession, table: str, files: dict, meta: dict):
         return df
     full_paths = [os.path.join(table, p) for p in paths]
     root = os.path.abspath(table) + os.sep
+    # the predicate speaks LOGICAL names: on a column-mapped table the
+    # raw scan yields physical names (inferred from the footers), so
+    # project the logical view first; otherwise read with the declared
+    # schema and start no inference job
+    pm = _cm_phys_map(meta)
+    rdr = spark.read if pm else spark.read.schema(_declared_schema(meta))
     if all(os.path.abspath(p).startswith(root) for p in full_paths):
-        df = spark.read.option("basePath", table).parquet(*full_paths)
+        df = rdr.option("basePath", table).parquet(*full_paths)
     else:
         # absolute external paths (shallow clones): basePath must prefix
         # every file; clones are unpartitioned by gate
-        df = spark.read.parquet(*full_paths)
-    # the predicate speaks LOGICAL names: on a column-mapped table the
-    # raw scan yields physical names, so project the logical view first
-    pm = _cm_phys_map(meta)
+        df = rdr.parquet(*full_paths)
     data_cols = (
         [F.col(f"`{p}`").alias(l) for l, p in pm.items()]
         if pm
@@ -1986,6 +2007,26 @@ def _commit_dv_deletes(
     return n_new
 
 
+def pin_merge_source(source: DataFrame, keys: list[str]) -> tuple[DataFrame, int]:
+    """Pin a MERGE source (local checkpoint: the merge reads it more than
+    once) and check it in ONE aggregate over the pinned rows: the sum of
+    the per-key counts is the row count, and a maximum above one means a
+    repeated key. Returns (pinned source, row count); raises ValueError
+    when the source is not unique on ``keys``."""
+    from pyspark.sql import functions as F
+
+    src = source.localCheckpoint(eager=True)
+    row = (
+        src.groupBy(*keys)
+        .count()
+        .agg(F.sum("count").alias("rows"), F.max("count").alias("most"))
+        .first()
+    )
+    if (row["most"] or 0) > 1:
+        raise ValueError(f"merge source is not unique on keys {keys}")
+    return src, int(row["rows"] or 0)
+
+
 def delta_merge(
     spark: SparkSession,
     table: str,
@@ -1998,7 +2039,8 @@ def delta_merge(
     vector deleted (no data-file rewrite), then ALL source rows are
     appended (matched rows as their updated images, unmatched as
     inserts). One delete commit + one append commit. ``source`` must be
-    key-unique (checked) and carry the table's columns. Returns
+    key-unique and carry the table's columns; the pinned source is
+    checked and counted in one aggregate (``pin_merge_source``). Returns
     {"updated": n, "inserted": n}.
 
     Scale shape: matching is a broadcast-or-shuffle equi-join emitting
@@ -2007,10 +2049,7 @@ def delta_merge(
     from pyspark.sql import functions as F
 
     files, meta, proto, version = _snapshot(table)
-    if source.groupBy(*keys).count().where("count > 1").limit(1).count():
-        raise ValueError(f"merge source is not unique on keys {keys}")
-    src = source.localCheckpoint(eager=True)  # pin: read twice below
-    n_src = src.count()
+    src, n_src = pin_merge_source(source, keys)
     n_matched = 0
     if files:
         rel_by_plain = {
@@ -2018,7 +2057,7 @@ def delta_merge(
         }
         tagged = _raw_tagged(spark, table, files, meta)
         matches = (
-            tagged.join(F.broadcast(src.select(*keys).distinct()), on=keys)
+            tagged.join(F.broadcast(src.select(*keys)), on=keys)  # key-unique
             .select("_dv_p", "_dv_i")
             .collect()
         )

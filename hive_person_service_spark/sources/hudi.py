@@ -54,8 +54,8 @@ scan (predicate pushdown / column pruning intact).  The MOR snapshot
 merge is a per-record-key window restricted to the file groups that
 actually carry logs -- the same "merge only what changed" bound real
 MOR readers get, and the log side is decoded executor-side via
-mapInPandas over a binaryFile listing (Arrow-batched, never on the
-driver).
+mapInPandas over a path list whose tasks come from the local scan's
+partitioning (Arrow-batched, never on the driver).
 
 SURVEY.md §2.A row: open-table-format interop (third format).  The
 judge-facing queries live in plans/pipeline46.py.
@@ -1230,7 +1230,10 @@ def hudi_write(
     with commit time as the ordering); MOR appends an AVRO_DATA log
     block to each touched bucket that already has a base file (buckets
     seen for the first time still get a base file, as real MOR writers
-    do).  ``mode="insert_overwrite"`` replaces ALL existing file groups
+    do).  The MOR log blocks are encoded on the driver from ONE collect
+    of the batch's rows for existing file groups, so the driver holds
+    all of the batch's updated rows at once, not one group's.
+    ``mode="insert_overwrite"`` replaces ALL existing file groups
     via a replacecommit.  ``ingest=(app_id, batch_id)`` embeds a
     replay-protection marker in the commit metadata (the deltastreamer-
     checkpoint slot) -- pair with ``hudi_txn_version`` for exactly-once
@@ -1302,15 +1305,20 @@ def hudi_write(
             )
         schema = df_meta.drop("_hoodie_bucket").schema
         avro_schema = spark_to_avro_schema(schema, "HoodieRecord")
+        # ONE collect of every update group's rows, split per file group
+        # on the driver: a collect per group would re-run _with_meta's
+        # row_number window (a shuffle) once per group
+        upd_rows = (
+            df_meta.where(gkey.isin(_keys(upd_groups))).toPandas()
+            if upd_groups else None
+        )
         for p, b in upd_groups:
             fid = fid_of[(p, b)]
             base_instant = slices[fid]["base_instant"]
-            pdf = (
-                df_meta.where(gkey == "\x01".join([p, str(b)]))
-                .drop("_hoodie_bucket")
-                .toPandas()
-            )  # one file group's delta -- the same bounded batch a real
-            # writer buffers before sealing a log block
+            pdf = upd_rows[
+                (upd_rows["_hoodie_partition_path"] == p)
+                & (upd_rows["_hoodie_bucket"] == b)
+            ].drop(columns="_hoodie_bucket")
             records = _pdf_to_records(pdf, schema)
             version = len(slices[fid]["logs"]) + 1
             name = f".{fid}_{base_instant}.log.{version}_{_WRITE_TOKEN}"
@@ -1470,6 +1478,8 @@ def _read_base(spark: SparkSession, table: str, files: list[str]) -> DataFrame:
         return spark.read.parquet(*files)
     hit = _BASE_SCHEMA_CACHE.get(key)
     if hit is not None and hit[0] == sig:
+        # LRU: a hit moves the key to the end, away from eviction
+        _BASE_SCHEMA_CACHE[key] = _BASE_SCHEMA_CACHE.pop(key)
         return spark.read.schema(hit[1]).parquet(*files)
     df = spark.read.parquet(*files)
     if len(_BASE_SCHEMA_CACHE) >= 256:
@@ -1501,8 +1511,9 @@ def _latest_per_key(df: DataFrame) -> DataFrame:
 def _merge_slices(spark: SparkSession, table: str, slices: dict[str, dict]) -> DataFrame:
     """Snapshot of the given MOR file groups: base rows + decoded log
     rows, merged per record key (latest commit wins), delete blocks
-    honored.  Log decode runs executor-side (binaryFile listing +
-    mapInPandas over the block framing).
+    honored.  Log decode runs executor-side: mapInPandas over a local
+    DataFrame of log paths (its scan splits the list into min(#files,
+    default parallelism) tasks), each task opening its files directly.
 
     Only file groups that actually CARRY logs go through the per-key
     merge window (r12: the code now matches this long-documented bound).
@@ -1558,11 +1569,11 @@ def _merge_slices(spark: SparkSession, table: str, slices: dict[str, dict]) -> D
                         continue
                     yield out
 
-    logs = (
-        spark.createDataFrame([(p,) for p in log_files], "path string")
-        .repartition(min(len(log_files), 32))
-        .mapInPandas(decode, schema=out_schema)
-    )
+    # the local scan of the path list already splits it into
+    # min(#files, default parallelism) tasks: no repartition shuffle
+    logs = spark.createDataFrame(
+        [(p,) for p in log_files], "path string"
+    ).mapInPandas(decode, schema=out_schema)
     merged = _latest_per_key(
         base.withColumn("_hoodie_is_deleted", F.lit(False)).unionByName(logs)
     )

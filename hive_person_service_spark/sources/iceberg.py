@@ -454,17 +454,20 @@ def _live_tagged(
     if not plan["data"]:
         return None, plan
     reader = spark.read
-    if merge_schema:
+    evolved = len(meta.get("schemas") or []) > 1
+    if merge_schema and not evolved:
         # row-lineage reads: compacted files carry materialized _row_id
         # columns the fresh files lack -- merge so they are visible
         reader = reader.option("mergeSchema", "true")
-    if len(meta.get("schemas") or []) > 1:
-        # schema-evolved table: resolve columns by parquet FIELD ID so
+    else:
+        # the metadata declares the schema: no footer-inference job. A
+        # schema-evolved table resolves columns by parquet FIELD ID so
         # renamed columns re-map old files and added columns backfill
         # null (Spark's native field-id resolution; our writer always
         # stamps ids)
-        reader = reader.schema(_schema_from_iceberg(meta, with_field_ids=True))
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+        reader = reader.schema(_schema_from_iceberg(meta, with_field_ids=evolved))
+        if evolved:
+            spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     df = reader.parquet(*[p for p, _s, _i in plan["data"]])
     # normalize file:/p, file:///p -> /p (Hadoop URI form varies)
     df = df.withColumn(
@@ -539,7 +542,10 @@ def _live_tagged(
         df = df.join(
             F.broadcast(seq_df), df["__p"] == seq_df["___path"], "left"
         ).drop("___path")
+        from pyspark.sql.types import StructType
+
         names = _field_names_by_id(meta)
+        declared = {f.name: f for f in _schema_from_iceberg(meta).fields}
         for path, ids, del_seq in plan["eq"]:
             try:
                 key_cols = [names[i] for i in ids]
@@ -548,12 +554,17 @@ def _live_tagged(
                     f"equality_ids {list(ids)} reference unknown schema "
                     f"field ids (have {sorted(names)})"
                 ) from exc
-            keys = (
-                spark.read.parquet(path)
-                .select(
-                    *[F.col(c).alias(f"__k_{c}") for c in key_cols]
-                )
-                .distinct()
+            # read with the key columns' declared types (no inference
+            # job). On an evolved table a key column may have been
+            # renamed since the delete file was written: infer there, so
+            # a missing column fails loudly instead of reading as null.
+            # A repeated key leaves an anti-join's result as it is, so
+            # no distinct (and no shuffle) either.
+            rdr = spark.read if evolved else spark.read.schema(
+                StructType([declared[c] for c in key_cols])
+            )
+            keys = rdr.parquet(path).select(
+                *[F.col(c).alias(f"__k_{c}") for c in key_cols]
             )
             cond = reduce(
                 lambda a, b: a & b,
@@ -2119,7 +2130,9 @@ def iceberg_delete_equality(
     import shutil
 
     shutil.rmtree(stage, ignore_errors=True)
-    n_keys = spark.read.parquet(del_path).count()
+    import pyarrow.parquet as papq
+
+    n_keys = papq.read_metadata(del_path).num_rows  # footer, not a job
 
     entries = [
         {
@@ -2149,21 +2162,21 @@ def iceberg_merge(
     sequence numbers -- no data file rewritten) followed by ONE append of
     all source rows. The sequence-number rule makes the pair safe: the
     append lands at a later sequence number, so the delete can never
-    swallow the new images. ``source`` must be key-unique (checked).
-    Returns {"updated": n, "inserted": n} (updated = source keys that
-    existed live before the merge)."""
+    swallow the new images. ``source`` must be key-unique; the pinned
+    source is checked and counted in one aggregate
+    (``delta_log.pin_merge_source``). Returns {"updated": n, "inserted":
+    n} (updated = source keys that existed live before the merge)."""
     from pyspark.sql import functions as F
 
-    if source.groupBy(*keys).count().where("count > 1").limit(1).count():
-        raise ValueError(f"merge source is not unique on keys {keys}")
-    src = source.localCheckpoint(eager=True)  # pin: read three times below
+    from .delta_log import pin_merge_source
+
+    src, n_src = pin_merge_source(source, keys)  # read three times below
     meta = _load_metadata(table)
     live, _plan = _live_tagged(spark, table, meta)
-    n_src = src.count()
     n_matched = 0
     if live is not None:
         n_matched = (
-            live.join(F.broadcast(src.select(*keys).distinct()), on=keys)
+            live.join(F.broadcast(src.select(*keys)), on=keys)  # key-unique
             .count()
         )
         iceberg_delete_equality(spark, table, src.select(*keys))

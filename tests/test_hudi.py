@@ -775,6 +775,28 @@ def test_read_base_schema_cache_sees_new_commits(spark, people, tmp_path):
     assert got.count() == 100
     assert got.agg(F.sum("id")).first()[0] == sum(range(1, 101))
 
+    # LRU, not FIFO: a file set read on every pass survives 256 one-off
+    # inserts (FIFO evicts it at the 256th). The one-off reads go through
+    # a stand-in session, so they cost no Spark job.
+    from types import SimpleNamespace
+
+    from hive_person_service_spark.sources import hudi as hudi_mod
+
+    cache = hudi_mod._BASE_SCHEMA_CACHE
+    cache.clear()
+    hudi_scan(spark, t)
+    (hot,) = cache
+    stand_in = SimpleNamespace(
+        read=SimpleNamespace(parquet=lambda *f: SimpleNamespace(schema=None))
+    )
+    for i in range(256):
+        one_off = tmp_path / f"one_off_{i}.parquet"
+        one_off.write_bytes(b"")
+        hudi_mod._read_base(stand_in, t, [str(one_off)])
+        hudi_mod._read_base(spark, t, list(hot))
+    assert hot in cache and len(cache) == 256
+    cache.clear()
+
 
 def test_mor_merge_windows_only_log_bearing_groups(spark, people, tmp_path):
     # An update that touches ONE bucket leaves the other file groups

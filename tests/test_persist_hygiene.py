@@ -20,11 +20,10 @@ from tests.conftest import SF_MED
 
 
 def _n_cached(spark) -> int:
-    # persisted *datasets* (DataFrame.persist goes through CacheManager,
-    # not getPersistentRDDs); the Java CacheManager is invisible from
-    # PySpark, so count via the storage status of cached RDDs instead
-    jsc = spark.sparkContext._jsc.sc()
-    return jsc.getPersistentRDDs().size()
+    # persisted *datasets*: DataFrame.persist registers with the session's
+    # CacheManager. The session-wide getPersistentRDDs() would also count
+    # localCheckpoint RDDs that earlier tests left behind.
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
 
 
 def test_persist_bounded_slots_do_not_grow(spark):
@@ -83,6 +82,30 @@ def test_persist_bounded_swaps_on_plan_change(spark):
     _LAST_PERSISTED.clear()
 
 
+def test_persist_bounded_survives_dead_previous_entry(spark):
+    from hive_person_service_spark.operators.caching import (
+        _LAST_PERSISTED,
+        persist_bounded,
+    )
+
+    class DeadEntry:
+        """A cached frame whose session is gone: unpersist raises."""
+
+        def unpersist(self, blocking=False):
+            raise RuntimeError("SparkContext was shut down")
+
+    spark.catalog.clearCache()
+    _LAST_PERSISTED.clear()
+    _LAST_PERSISTED["t_dead"] = (-1, DeadEntry())
+    df = persist_bounded("t_dead", spark.range(5))
+    # the slot is overwritten with the live relation, not left stale
+    assert _LAST_PERSISTED["t_dead"][1] is df
+    assert df.count() == 5
+
+    spark.catalog.clearCache()
+    _LAST_PERSISTED.clear()
+
+
 def test_pagerank_releases_loop_caches(spark):
     from hive_person_service_spark.operators.graph import pagerank
 
@@ -94,7 +117,7 @@ def test_pagerank_releases_loop_caches(spark):
     ranks = pagerank(edges, n_iter=3)
     rows = {r["node"]: r["rank"] for r in ranks.collect()}
     assert abs(sum(rows.values()) - 1.0) < 1e-9
-    # checkpoint-cut final plan -> the loop's 3 persisted inputs released;
-    # only per-round localCheckpoint RDDs (<= n_iter, ContextCleaner drains
-    # them lazily) may remain. An un-released loop would show 3 more.
+    # checkpoint-cut final plan -> the loop's 3 persisted inputs released
+    # (per-round localCheckpoint RDDs are not CacheManager entries). An
+    # un-released loop would show 3 more.
     assert _n_cached(spark) <= before + 3
