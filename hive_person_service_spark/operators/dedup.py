@@ -10,10 +10,11 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles_expr, tokens_expr
+from .caching import persist_bounded as _persist_bounded  # one live cache per slot
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -45,6 +46,18 @@ def _perm_constants(num_perm: int) -> list[tuple[int, int]]:
     ]
 
 
+def _base_hash(shingle: Column, reproducible: bool = False) -> Column:
+    """Per-shingle base hash in [0, 2^31-1): xxhash64, or -- when
+    ``reproducible`` -- the first 32 md5 bits (the md5_int idiom of
+    operators/sketches.py), which any engine with md5 + hex parsing
+    computes identically. xxhash64 is one JVM hash call; md5 adds a hex
+    parse per shingle."""
+    m = F.lit(_MERSENNE_31)
+    if reproducible:
+        return F.pmod(F.conv(F.substring(F.md5(shingle), 1, 8), 16, 10).cast("long"), m)
+    return F.pmod(F.xxhash64(shingle), m)
+
+
 def minhash_signatures(
     shingled: DataFrame, num_perm: int = 32, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -54,7 +67,7 @@ def minhash_signatures(
     full hash calls. All arithmetic stays under 2^62 (ANSI mode on Spark 4
     makes silent wrap-around an error, so the classic overflow trick is
     off the table). One pass, one shuffle, map-side partial min."""
-    h = F.pmod(F.xxhash64(F.col("shingle")), F.lit(_MERSENNE_31))
+    h = _base_hash(F.col("shingle"))
     aggs = [
         F.min(F.pmod(F.lit(a) * h + F.lit(b), F.lit(_MERSENNE_31))).alias(f"sig_{j}")
         for j, (a, b) in enumerate(_perm_constants(num_perm))
@@ -62,41 +75,111 @@ def minhash_signatures(
     return shingled.groupBy(id_col).agg(*aggs)
 
 
+#: Max base hashes vectorized per numpy slab inside _fold_min_perms_arrow
+#: (module-level so tests can shrink it to exercise the chunked paths).
+_FOLD_SLAB = 1 << 18
+
+
+def _fold_min_perms_arrow(
+    hashed: DataFrame, num_perm: int, id_col: str
+) -> DataFrame:
+    """Turn (id, _hs array<long>) base-hash rows into MinHash signatures by
+    folding the universal-hash permutations in ONE vectorized numpy stage.
+
+    A JVM expression fold (F.aggregate + zip_with) is interpreted per array
+    element -- no codegen for higher-order-function lambdas -- and that
+    interpretation dominates signature cost at 32 permutations. Here only
+    (id, base hashes) cross the Arrow boundary (a few bytes per shingle,
+    never text), and the permutation mins compute as two int64 matrix ops
+    per batch: (h[:, None] * A + B) % M, then a segmented min over each
+    row's slice. Arithmetic is IDENTICAL to minhash_signatures (int64
+    exact, all values < 2^62): same constants, same mod, same mins.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    consts = _perm_constants(num_perm)
+    a_np = np.array([a for a, _ in consts], dtype=np.int64)
+    b_np = np.array([b for _, b in consts], dtype=np.int64)
+    m = _MERSENNE_31
+    names = [id_col] + [f"sig_{j}" for j in range(num_perm)]
+    out_schema = ", ".join(f"{n} long" for n in names)
+
+    # Bound the vectorization temporaries: the (hashes x num_perm) int64
+    # product matrix is the big allocation (a 10k-row Arrow batch of
+    # long documents can hold tens of millions of hashes -> multi-GB
+    # temporaries). Fold at most _FOLD_SLAB hashes per slab (2 temporaries
+    # of <= slab * num_perm int64s, ~64 MB each at num_perm=32), carrying
+    # the row-segment boundaries; min-of-slab-mins == min-of-all, so the
+    # signatures are bit-identical to the unchunked fold.
+    _SLAB = _FOLD_SLAB
+
+    def fold(batches):
+        for batch in batches:
+            ids = batch.column(0)
+            hs = batch.column(1)
+            # list<int64> = one contiguous values buffer + offsets; slice
+            # out this batch's window (zero-copy) before vectorizing
+            offs = hs.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+            vals = hs.values.to_numpy(zero_copy_only=False).astype(np.int64)
+            vals = vals[offs[0]:offs[-1]]
+            offs = offs - offs[0]
+            if len(vals) == 0:
+                continue
+            n_rows = len(offs) - 1
+            sigs = np.empty((n_rows, num_perm), dtype=np.int64)
+            i = 0
+            while i < n_rows:
+                # grow [i, j) while the slab stays under budget (always
+                # taking at least one row)
+                j = i + 1
+                while j < n_rows and offs[j + 1] - offs[i] <= _SLAB:
+                    j += 1
+                lo, hi = offs[i], offs[j]
+                if hi - lo <= _SLAB:
+                    perm = (vals[lo:hi, None] * a_np[None, :] + b_np[None, :]) % m
+                    # rows are non-empty by construction (callers filter
+                    # docs with fewer than n tokens), so every reduceat
+                    # segment is valid
+                    sigs[i:j] = np.minimum.reduceat(perm, offs[i:j] - lo, axis=0)
+                else:
+                    # one row alone exceeds the slab: running min over
+                    # value-chunks of that row (same arithmetic, same min)
+                    acc = np.full(num_perm, np.iinfo(np.int64).max)
+                    for s in range(lo, hi, _SLAB):
+                        chunk = (
+                            vals[s:min(s + _SLAB, hi), None] * a_np[None, :]
+                            + b_np[None, :]
+                        ) % m
+                        np.minimum(acc, chunk.min(axis=0), out=acc)
+                    sigs[i] = acc
+                i = j
+            cols = [pa.array(sigs[:, j], type=pa.int64()) for j in range(num_perm)]
+            yield pa.RecordBatch.from_arrays([ids] + cols, names=names)
+
+    return hashed.mapInArrow(fold, out_schema)
+
+
 def minhash_signatures_inrow(
-    docs: DataFrame, num_perm: int = 32, shingle_n: int = 3, id_col: str = "doc_id"
+    docs: DataFrame,
+    num_perm: int = 32,
+    shingle_n: int = 3,
+    id_col: str = "doc_id",
+    reproducible: bool = False,
 ) -> DataFrame:
     """MinHash signatures with ZERO shuffle: the shingle set never leaves
-    the row -- base hashes via transform over the in-row array, each
-    permutation an array_min over a mul-add transform. Produces signatures
-    identical to minhash_signatures (same constants, same arithmetic), but
-    replaces the exploded shingle relation's groupBy (a full shuffle of
-    ~200x the corpus row count) with per-row expression work: the map-side-
-    only shape you want when signatures are all you need. Documents too
-    short to have a single shingle are dropped, mirroring the grouped
-    variant (they produce no exploded rows there).
-
-    Computed as ONE fold over the shingle array (F.aggregate with a
-    num_perm-wide accumulator: per shingle, zip_with the permuted hashes
-    against the running mins) instead of num_perm separate array
-    traversals -- measured 2.3x faster at sf0.1 (1.9s vs 4.5s cold) with
-    bit-identical output.
-
-    When to use which: this variant wins when signatures are the main
-    cost (signature-index builds, incremental new-batch fingerprinting,
-    the candidate-verify pipeline in near_duplicates_minhash_inrow, or a
-    cluster where the shingle shuffle -- ~200x corpus rows -- dominates);
-    grouped signatures win only when the exploded shingle relation is
-    persisted for other consumers anyway."""
-    consts = _perm_constants(num_perm)
-    a_arr = F.array(*[F.lit(a).cast("long") for a, _ in consts])
-    b_arr = F.array(*[F.lit(b).cast("long") for _, b in consts])
-    acc0 = F.array(*[F.lit(_MERSENNE_31).cast("long") for _ in range(num_perm)])
-    m = F.lit(_MERSENNE_31)
-    sh = F.array_distinct(shingles_expr(tokens_expr(), shingle_n))
-    # Hash each shingle ONCE into _hs (HOF lambdas get no common-
-    # subexpression elimination -- hashing inside the fold would cost
-    # num_perm hash calls per shingle), then fold the mul-add mins.
-    hs = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), m))
+    the row. Base hashes (_base_hash) are computed JVM-side over the
+    in-row shingle array, then the permutation mins fold in one vectorized
+    Arrow stage (_fold_min_perms_arrow). With the default xxhash64 base
+    hash the signatures are bit-identical to minhash_signatures over
+    doc_shingles (same constants, same arithmetic), without the exploded
+    shingle relation's groupBy (a full shuffle of ~200x the corpus row
+    count). Documents too short to have a single shingle are dropped,
+    mirroring minhash_signatures (they produce no exploded rows there)."""
+    hs = F.transform(
+        shingles_expr(tokens_expr(), shingle_n),
+        lambda s: _base_hash(s, reproducible),
+    )
     # Guard on the CHEAP equivalent predicate (shingles are empty iff the
     # doc has < n tokens): a guard on size(_hs) gets predicate-pushed below
     # the caller's repartition with the whole shingling expression
@@ -105,26 +188,34 @@ def minhash_signatures_inrow(
     base = docs.where(F.size(tokens_expr()) >= shingle_n).select(
         F.col(id_col), hs.alias("_hs")
     )
-    sig = F.aggregate(
-        F.col("_hs"),
-        acc0,
-        lambda acc, h: F.zip_with(
-            F.zip_with(a_arr, b_arr, lambda a, b: F.pmod(a * h + b, m)),
-            acc,
-            lambda x, y: F.least(x, y),
-        ),
-    )
-    # Two projections on purpose: referencing the fold once under an alias
-    # keeps CollapseProject from inlining one copy of the whole aggregate
-    # into each of the num_perm output columns (it only duplicates cheap
-    # expressions; a HOF fold is not one).
-    return base.select(F.col(id_col), sig.alias("_sig")).select(
-        F.col(id_col),
-        *[
-            F.element_at("_sig", j + 1).alias(f"sig_{j}")
-            for j in range(num_perm)
-        ],
-    )
+    return _fold_min_perms_arrow(base, num_perm, id_col)
+
+
+def _band_rows(
+    signatures: DataFrame,
+    num_perm: int,
+    bands: int,
+    id_col: str = "doc_id",
+    exact: bool = False,
+) -> DataFrame:
+    """(id, band_id, band_key) per document and band of num_perm // bands
+    signature slots. The key is xxhash64 over the band's slots, or with
+    ``exact`` the raw slot tuple as a collision-free string: candidate
+    generation then means exactly 'some band's slots all equal', which
+    plain SQL replays as equi-joins (the dedup_near oracle)."""
+    rows_per_band = num_perm // bands
+
+    def key(b: int) -> Column:
+        slots = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
+        return F.concat_ws(",", *slots) if exact else F.xxhash64(*slots)
+
+    cols = [
+        F.struct(F.lit(b).alias("band_id"), key(b).alias("band_key"))
+        for b in range(bands)
+    ]
+    return signatures.select(
+        F.col(id_col), F.explode(F.array(*cols)).alias("band")
+    ).select(id_col, "band.band_id", "band.band_key")
 
 
 def lsh_candidate_pairs(
@@ -132,30 +223,17 @@ def lsh_candidate_pairs(
     num_perm: int = 32,
     bands: int = 8,
     id_col: str = "doc_id",
+    exact: bool = False,
 ) -> DataFrame:
-    """LSH banding: hash each band of rows_per_band signature slots, then
-    self-join *within* (band_id, band_hash) buckets -> candidate (a, b)
-    pairs, a < b, distinct.
+    """LSH banding: key each band of rows_per_band signature slots
+    (_band_rows), then self-join *within* (band_id, band_key) buckets ->
+    candidate (a, b) pairs, a < b, distinct.
 
     Scale shape: explode to bands (xN rows), groupBy-join on the band key --
     fan-out bounded by bucket size; skewed buckets (boilerplate text) split
     by AQE skew-join. Never a corpus cross-join.
     """
-    rows_per_band = num_perm // bands
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.xxhash64(
-                *[F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
-    banded = signatures.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
-    ).select(
-        id_col, F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash")
-    )
+    banded = _band_rows(signatures, num_perm, bands, id_col, exact)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -163,7 +241,7 @@ def lsh_candidate_pairs(
             b,
             on=[
                 F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_hash") == F.col("b.band_hash"),
+                F.col("a.band_key") == F.col("b.band_key"),
                 F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
             ],
         )
@@ -201,79 +279,46 @@ def verify_jaccard(
     )
 
 
-# Bounded plan-outliving caches: one live relation per slot, previous
-# cache dropped when the plan changes, kept when identical (so repeated
-# identical queries still hit it). Shared implementation in
-# operators/caching.py (r12: plan-level persists use it too).
-from .caching import persist_bounded as _persist_bounded  # noqa: E402
-
-
 def near_duplicates_minhash(
     df: DataFrame,
     threshold: float = 0.7,
     num_perm: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: shingle -> minhash -> band ->
-    bucket-join -> exact-Jaccard verify -> threshold filter.
-
-    The shingle relation feeds three consumers (signatures + both sides of
-    the verify join), so it is persisted -- without it Spark re-scans and
-    re-shingles the corpus per consumer. At 100 TB the same role is played
-    by materializing shingles to a parquet staging table. Measured (sf0.1,
-    warm): grouped signatures over the persisted shingles beat the
-    zero-shuffle in-row variant here (3.0s vs 4.2s end-to-end) because the
-    shingle relation is needed by the verify join anyway -- use
-    minhash_signatures_inrow only when signatures are the SOLE consumer."""
-    # Fan the (narrow) doc rows across all cores before the wide explode --
-    # a single-row-group parquet file otherwise pins shingling to one task.
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism)
-    shingled = _persist_bounded("minhash_shingled", doc_shingles(df, n=shingle_n))
-    sigs = minhash_signatures(shingled, num_perm=num_perm)
-    cands = lsh_candidate_pairs(sigs, num_perm=num_perm, bands=bands)
-    return verify_jaccard(cands, shingled).where(F.col("jaccard") >= threshold)
-
-
-def near_duplicates_minhash_inrow(
-    df: DataFrame,
-    threshold: float = 0.7,
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
+    reproducible: bool = False,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs, candidate-verify formulation: in-row
     signatures (zero shuffle -- the shingle set never leaves the row) ->
     banding/bucket join -> exact-Jaccard verify that shingles ONLY the
-    documents appearing in some candidate pair.
+    documents appearing in some candidate pair. Verification cost scales
+    with the candidate set, not the corpus -- the shape you want when
+    near-dups are sparse (every real training corpus) and on cold sessions
+    where a persisted corpus-wide shingle relation never amortizes.
 
-    Same output contract as near_duplicates_minhash (identical signature
-    arithmetic/constants, same banding), different cost shape: the grouped
-    pipeline shuffles the full exploded shingle relation (~200x corpus
-    rows) once for signatures and keeps it persisted for verification; this
-    one never shuffles shingles at all and pays corpus-wide work only as
-    per-row expression evaluation. Verification cost scales with the
-    candidate set, not the corpus -- the shape you want when near-dups are
-    sparse (every real training corpus) and on cold sessions where the
-    grouped path's persist never amortizes. Measured sf0.1 cold: 3.4s vs
-    11.7s for the grouped form."""
+    ``reproducible`` makes every stage deterministic arithmetic another
+    engine can replay: md5 base hashes and raw-tuple bands, so the output
+    -- including which pairs banding surfaces -- is oracle-checkable, not
+    recall-probabilistic from the oracle's view (dedup_near). The default
+    xxhash64 path returns the same pairs as the grouped composition
+    verify_jaccard(lsh_candidate_pairs(minhash_signatures(sh)), sh)."""
+    # Fan the (narrow) doc rows across all cores before the in-row work --
+    # a single-row-group parquet file otherwise pins it to one task.
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         df = df.repartition(sc.defaultParallelism)
-    # vectorized fold (bit-identical signatures; see
-    # minhash_signatures_inrow_vec / _fold_min_perms_arrow); persisted
-    # because the band self-join scans the signature relation twice (the
-    # md5 variant's discipline)
+    slot = "minhash_md5" if reproducible else "minhash_inrow"
+    # persist the signatures BEFORE banding: the band self-join has two
+    # scans of this relation, and unpersisted each side would recompute
+    # every per-shingle base hash + permutation fold
     sigs = _persist_bounded(
-        "minhash_inrow_sigs",
-        minhash_signatures_inrow_vec(df, num_perm=num_perm,
-                                     shingle_n=shingle_n),
+        f"{slot}_sigs",
+        minhash_signatures_inrow(
+            df, num_perm=num_perm, shingle_n=shingle_n, reproducible=reproducible
+        ),
     )
     cands = _persist_bounded(
-        "minhash_inrow_cands",
-        lsh_candidate_pairs(sigs, num_perm=num_perm, bands=bands),
+        f"{slot}_cands",
+        lsh_candidate_pairs(sigs, num_perm=num_perm, bands=bands, exact=reproducible),
     )
     cand_ids = (
         cands.select(F.col("id_a").alias("doc_id"))
@@ -281,7 +326,12 @@ def near_duplicates_minhash_inrow(
         .distinct()
     )
     cand_docs = df.join(cand_ids, "doc_id", "left_semi")
-    shingled = doc_shingles(cand_docs, n=shingle_n)
+    # persisted for the same reason as the signatures: verify_jaccard
+    # joins this relation on BOTH pair sides, and it is bounded by the
+    # candidate count, not the corpus
+    shingled = _persist_bounded(
+        f"{slot}_shingled", doc_shingles(cand_docs, n=shingle_n)
+    )
     return verify_jaccard(cands, shingled).where(F.col("jaccard") >= threshold)
 
 
@@ -305,27 +355,14 @@ def near_duplicates_incremental(
     new_shingled = _persist_bounded(
         "incremental_new_shingled", doc_shingles(new_docs, n=shingle_n)
     )
-    new_sigs = minhash_signatures(new_shingled, num_perm=num_perm)
-    corpus_sigs = minhash_signatures(corpus_shingled, num_perm=num_perm)
 
-    def banded(sigs: DataFrame, out_id: str) -> DataFrame:
-        rows_per_band = num_perm // bands
-        cols = [
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    *[F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-        return sigs.select(
-            F.col("doc_id").alias(out_id), F.explode(F.array(*cols)).alias("band")
-        ).select(out_id, "band.band_id", "band.band_hash")
+    def banded(shingled: DataFrame, out_id: str) -> DataFrame:
+        sigs = minhash_signatures(shingled, num_perm=num_perm)
+        return _band_rows(sigs, num_perm, bands).withColumnRenamed("doc_id", out_id)
 
     cands = (
-        banded(corpus_sigs, "id_a")
-        .join(banded(new_sigs, "id_b"), ["band_id", "band_hash"])
+        banded(corpus_shingled, "id_a")
+        .join(banded(new_shingled, "id_b"), ["band_id", "band_key"])
         .where(F.col("id_a") != F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
@@ -484,273 +521,3 @@ def jaccard_join_prefix(
     return verify_jaccard(cands, shingled, id_col=id_col).where(
         F.col("jaccard") >= threshold
     )
-
-
-def minhash_signatures_inrow_md5(
-    docs: DataFrame, num_perm: int = 32, shingle_n: int = 3, id_col: str = "doc_id"
-) -> DataFrame:
-    """In-row MinHash signatures whose base hash is ENGINE-REPRODUCIBLE:
-    h = first 32 md5 bits of the shingle (mod 2^31-1), the same md5_int
-    idiom the deterministic sketches use (operators/sketches.py) -- any
-    engine with md5 + hex parsing computes the identical value, unlike
-    xxhash64. Same fold structure / permutation constants as
-    minhash_signatures_inrow; use THIS variant when the downstream
-    consumer must be verifiable in another engine (the oracle-checked
-    dedup_near), the xxhash one when raw speed matters (one JVM hash call
-    vs an md5 + hex-parse per shingle)."""
-    consts = _perm_constants(num_perm)
-    a_arr = F.array(*[F.lit(a).cast("long") for a, _ in consts])
-    b_arr = F.array(*[F.lit(b).cast("long") for _, b in consts])
-    acc0 = F.array(*[F.lit(_MERSENNE_31).cast("long") for _ in range(num_perm)])
-    m = F.lit(_MERSENNE_31)
-    sh = F.array_distinct(shingles_expr(tokens_expr(), shingle_n))
-    hs = F.transform(
-        sh,
-        lambda s: F.pmod(
-            F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"), m
-        ),
-    )
-    base = docs.where(F.size(tokens_expr()) >= shingle_n).select(
-        F.col(id_col), hs.alias("_hs")
-    )
-    sig = F.aggregate(
-        F.col("_hs"),
-        acc0,
-        lambda acc, h: F.zip_with(
-            F.zip_with(a_arr, b_arr, lambda a, b: F.pmod(a * h + b, m)),
-            acc,
-            lambda x, y: F.least(x, y),
-        ),
-    )
-    return base.select(F.col(id_col), sig.alias("_sig")).select(
-        F.col(id_col),
-        *[F.element_at("_sig", j + 1).alias(f"sig_{j}") for j in range(num_perm)],
-    )
-
-
-#: Max base hashes vectorized per numpy slab inside _fold_min_perms_arrow
-#: (module-level so tests can shrink it to exercise the chunked paths).
-_FOLD_SLAB = 1 << 18
-
-
-def _fold_min_perms_arrow(
-    hashed: DataFrame, num_perm: int, id_col: str
-) -> DataFrame:
-    """Turn (id, _hs array<long>) base-hash rows into MinHash signatures by
-    folding the universal-hash permutations in ONE vectorized numpy stage.
-
-    The JVM expression fold (F.aggregate + zip_with) is interpreted per
-    array element -- no codegen for higher-order-function lambdas -- and
-    allocates two intermediate arrays per shingle; at 32 permutations that
-    interpretation dominates signature cost. Here only (id, base hashes)
-    cross the Arrow boundary (a few bytes per shingle, never text), and the
-    permutation mins compute as two int64 matrix ops per batch:
-    (h[:, None] * A + B) % M, then a segmented min over each row's slice.
-    Arithmetic is IDENTICAL to the expression fold (int64 exact, all values
-    < 2^62): same constants, same mod, same mins -- bit-equal signatures.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    consts = _perm_constants(num_perm)
-    a_np = np.array([a for a, _ in consts], dtype=np.int64)
-    b_np = np.array([b for _, b in consts], dtype=np.int64)
-    m = _MERSENNE_31
-    out_schema = ", ".join(
-        [f"{id_col} long"] + [f"sig_{j} long" for j in range(num_perm)]
-    )
-
-    # Bound the vectorization temporaries: the (hashes x num_perm) int64
-    # product matrix is the big allocation (a 10k-row Arrow batch of
-    # long documents can hold tens of millions of hashes -> multi-GB
-    # temporaries). Fold at most _FOLD_SLAB hashes per slab (2 temporaries
-    # of <= slab * num_perm int64s, ~64 MB each at num_perm=32), carrying
-    # the row-segment boundaries; min-of-slab-mins == min-of-all, so the
-    # signatures are bit-identical to the unchunked fold.
-    _SLAB = _FOLD_SLAB
-
-    def fold(batches):
-        for batch in batches:
-            ids = batch.column(0)
-            hs = batch.column(1)
-            if isinstance(hs, pa.ChunkedArray):  # not produced by mapInArrow,
-                hs = hs.combine_chunks()         # but cheap to be safe
-            # list<int64> = one contiguous values buffer + offsets; slice
-            # out this batch's window (zero-copy) before vectorizing
-            offs = hs.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = hs.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = vals[offs[0]:offs[-1]]
-            offs = offs - offs[0]
-            if len(vals) == 0:
-                continue
-            n_rows = len(offs) - 1
-            sigs = np.empty((n_rows, num_perm), dtype=np.int64)
-            i = 0
-            while i < n_rows:
-                # grow [i, j) while the slab stays under budget (always
-                # taking at least one row)
-                j = i + 1
-                while j < n_rows and offs[j + 1] - offs[i] <= _SLAB:
-                    j += 1
-                lo, hi = offs[i], offs[j]
-                if hi - lo <= _SLAB:
-                    perm = (vals[lo:hi, None] * a_np[None, :] + b_np[None, :]) % m
-                    # rows are non-empty by construction (callers filter
-                    # docs with fewer than n tokens), so every reduceat
-                    # segment is valid
-                    sigs[i:j] = np.minimum.reduceat(
-                        perm, offs[i:j] - lo, axis=0
-                    )
-                else:
-                    # one row alone exceeds the slab: running min over
-                    # value-chunks of that row (same arithmetic, same min)
-                    acc = np.full(num_perm, np.iinfo(np.int64).max)
-                    for s in range(lo, hi, _SLAB):
-                        chunk = (
-                            vals[s:min(s + _SLAB, hi), None] * a_np[None, :]
-                            + b_np[None, :]
-                        ) % m
-                        np.minimum(acc, chunk.min(axis=0), out=acc)
-                    sigs[i] = acc
-                i = j
-            arrays = [ids] + [
-                pa.array(sigs[:, j], type=pa.int64()) for j in range(num_perm)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                names=[id_col] + [f"sig_{j}" for j in range(num_perm)],
-            )
-
-    return hashed.mapInArrow(fold, out_schema)
-
-
-def minhash_signatures_inrow_vec(
-    docs: DataFrame, num_perm: int = 32, shingle_n: int = 3, id_col: str = "doc_id"
-) -> DataFrame:
-    """minhash_signatures_inrow (xxhash64 base hash) with the permutation
-    fold vectorized (_fold_min_perms_arrow): bit-identical signatures to
-    both the grouped and the in-row expression-fold variants -- same base
-    hash, same constants, same mod arithmetic."""
-    m = F.lit(_MERSENNE_31)
-    sh = shingles_expr(tokens_expr(), shingle_n)
-    hs = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), m))
-    base = docs.where(F.size(tokens_expr()) >= shingle_n).select(
-        F.col(id_col), hs.alias("_hs")
-    )
-    return _fold_min_perms_arrow(base, num_perm, id_col)
-
-
-def minhash_signatures_inrow_md5_vec(
-    docs: DataFrame, num_perm: int = 32, shingle_n: int = 3, id_col: str = "doc_id"
-) -> DataFrame:
-    """minhash_signatures_inrow_md5 with the permutation fold vectorized
-    (see _fold_min_perms_arrow): base hashes stay JVM-side (codegen'd md5 +
-    hex parse per DISTINCT in-row shingle), the 32-permutation min fold
-    runs in numpy. Bit-identical signatures, same zero-shuffle shape -- the
-    Arrow stage is map-only."""
-    m = F.lit(_MERSENNE_31)
-    sh = shingles_expr(tokens_expr(), shingle_n)
-    hs = F.transform(
-        sh,
-        lambda s: F.pmod(
-            F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"), m
-        ),
-    )
-    base = docs.where(F.size(tokens_expr()) >= shingle_n).select(
-        F.col(id_col), hs.alias("_hs")
-    )
-    return _fold_min_perms_arrow(base, num_perm, id_col)
-
-
-def lsh_candidate_pairs_exact_bands(
-    signatures: DataFrame,
-    num_perm: int = 32,
-    bands: int = 8,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """LSH banding joined on the RAW slot tuple (as a collision-free string
-    key) instead of xxhash64(band): candidate generation becomes exactly
-    'some band's slots all equal', with no hash-collision false candidates
-    -- which makes the WHOLE pipeline reproducible as 8 equi-joins in plain
-    SQL (the dedup_near oracle). Cost shape is identical to
-    lsh_candidate_pairs: explode to bands, equi-join on the band key."""
-    rows_per_band = num_perm // bands
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"sig_{b * rows_per_band + r}")
-                    for r in range(rows_per_band)
-                ],
-            ).alias("band_key"),
-        )
-        for b in range(bands)
-    ]
-    banded = signatures.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
-    ).select(id_col, "band.band_id", "band.band_key")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_key") == F.col("b.band_key"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-
-
-def near_duplicates_minhash_md5(
-    df: DataFrame,
-    threshold: float = 0.7,
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """MinHash-LSH near-dup pairs, ENGINE-REPRODUCIBLE end to end: md5
-    base hash -> universal-hash permutation mins (in-row, zero shuffle)
-    -> raw-tuple banding -> candidate-only exact-Jaccard verify. Every
-    stage is deterministic arithmetic another engine can replay, so the
-    output (including which pairs banding surfaces) is fully
-    oracle-checkable -- not recall-probabilistic from the oracle's view.
-    Same candidate-verify cost shape as near_duplicates_minhash_inrow."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism)
-    # persist the signatures BEFORE banding: the band self-join has two
-    # scans of this relation, and unpersisted each side would recompute
-    # every per-shingle md5 + 32-permutation fold (the whole signature
-    # arithmetic twice -- measured ~45% of the r7 bench query).
-    # The fold runs VECTORIZED (minhash_signatures_inrow_md5_vec: md5 stays
-    # JVM-side, the permutation mins compute in numpy) -- bit-identical
-    # signatures, measured 2.9x faster than the interpreted expression
-    # fold at sf0.1 (1.36s vs 3.93s noop-sink best-of-3, r11 opt round).
-    sigs = _persist_bounded(
-        "minhash_md5_sigs",
-        minhash_signatures_inrow_md5_vec(df, num_perm=num_perm,
-                                         shingle_n=shingle_n),
-    )
-    cands = _persist_bounded(
-        "minhash_md5_cands",
-        lsh_candidate_pairs_exact_bands(sigs, num_perm=num_perm, bands=bands),
-    )
-    cand_ids = (
-        cands.select(F.col("id_a").alias("doc_id"))
-        .unionAll(cands.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    cand_docs = df.join(cand_ids, "doc_id", "left_semi")
-    # persisted for the same reason as the signatures: verify_jaccard
-    # joins this relation on BOTH pair sides, and it is bounded by the
-    # candidate count, not the corpus
-    shingled = _persist_bounded(
-        "minhash_md5_shingled", doc_shingles(cand_docs, n=shingle_n)
-    )
-    return verify_jaccard(cands, shingled).where(F.col("jaccard") >= threshold)

@@ -144,34 +144,44 @@ def refresh_stats_index(
     return kept.unionByName(fresh)
 
 
+def interval_may_match(op: str, lo, hi, val) -> bool:
+    """Can some x in [lo, hi] satisfy ``x op val``? The file-skipping
+    kernel every format shares (Delta, Iceberg, Hudi, footer stats); each
+    caller decodes its own bounds. None means unknown, i.e. unbounded on
+    that side, so an unknown never lets a file be skipped."""
+    if op == "=":
+        return (lo is None or not val < lo) and (hi is None or not hi < val)
+    if op == ">=":
+        return hi is None or not hi < val
+    if op == ">":
+        return hi is None or val < hi
+    if op == "<=":
+        return lo is None or not val < lo
+    if op == "<":
+        return lo is None or lo < val
+    raise ValueError(f"unsupported pruning op {op!r}")
+
+
 def prune_files(
     stats: DataFrame, column: str, lo: float, hi: float
 ) -> list[str]:
-    """Files whose [min, max] range for `column` overlaps [lo, hi]. Files
-    with no stats row for the column are kept (unknown => cannot skip).
+    """Files whose [min, max] range for `column` may overlap [lo, hi].
+    Unknown => cannot skip: files with no stats row for the column, or
+    with a null min or max, are kept (skipping_scan re-applies the exact
+    predicate).
 
     ONE collect of the (tiny, files x columns) index instead of three
     separate jobs -- an unpersisted stats relation used to re-run its
-    footer-reading stage once per collect (r11 optimization round). The
-    set logic is identical, driver-side over the same rows."""
+    footer-reading stage once per collect (r11 optimization round)."""
     rows = stats.select("file", "column", "min_val", "max_val").collect()
     all_files = {r["file"] for r in rows}
     with_stats = {r["file"] for r in rows if r["column"] == column}
-    # both bounds guarded: a half-known range (one of min/max null --
-    # possible from a hand-built or merged stats source even though the
-    # footer reader sets both together) must behave like the old
-    # NULL-propagating SQL predicate: not provably overlapping => the
-    # file is NOT in `overlapping`, but it IS in `with_stats`, so it is
-    # pruned -- conservative would be keep; matching the original SQL
-    # exactly is what the oracle equivalence was proven against
     overlapping = {
         r["file"]
         for r in rows
         if r["column"] == column
-        and r["max_val"] is not None
-        and r["min_val"] is not None
-        and r["max_val"] >= lo
-        and r["min_val"] <= hi
+        and interval_may_match(">=", r["min_val"], r["max_val"], lo)
+        and interval_may_match("<=", r["min_val"], r["max_val"], hi)
     }
     return sorted((all_files - with_stats) | overlapping)
 

@@ -161,17 +161,16 @@ def dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     path -- banding + bucket join bounds candidate generation; exact Jaccard
     is verified for candidates only, so cost scales with the near-dup pair
     set, not the corpus. Declared on the ENGINE-REPRODUCIBLE formulation
-    (md5 base hash, in-row zero-shuffle signatures, raw-tuple banding --
-    operators/dedup.py::near_duplicates_minhash_md5) so the full pipeline,
-    including which pairs banding surfaces, is replayed by the DuckDB
-    oracle -- closing the one `err: no_oracle` row the driver sample
-    carried since round 3. The xxhash64 variants remain for speed-critical
-    internal consumers; pytest pins md5-variant recall against brute force
-    and its candidate superset property."""
-    from ..operators.dedup import near_duplicates_minhash_md5
+    (operators/dedup.py::near_duplicates_minhash with reproducible=True:
+    md5 base hash, in-row zero-shuffle signatures, raw-tuple banding) so
+    the full pipeline, including which pairs banding surfaces, is replayed
+    by the DuckDB oracle. dedup_cluster runs the same pipeline with the
+    default xxhash64 hashing; pytest pins the reproducible path's recall
+    against brute force and its candidate superset property."""
+    from ..operators.dedup import near_duplicates_minhash
 
     d = load_table(spark, sf_dir, "documents")
-    return near_duplicates_minhash_md5(d, threshold=0.7)
+    return near_duplicates_minhash(d, threshold=0.7, reproducible=True)
 
 
 @declare("dedup_cluster", oracle=None)  # rows-only: LSH + iterative CC
@@ -180,18 +179,17 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, canon, keep). The full pipeline a training-data run executes;
     group purity is pytest-verified on the real sf0.1 duplicates.
 
-    Pairs come from the candidate-verify formulation
-    (near_duplicates_minhash_inrow, vectorized in-row signatures): output
-    is bit-identical to the grouped form (same constants/banding, pinned
+    Pairs come from the candidate-verify near_duplicates_minhash
+    (xxhash64 in-row signatures, the same pipeline as dedup_near): output
+    equals the grouped-shuffle composition (same constants/banding, pinned
     by tests/test_operators.py), but only candidate documents are ever
     shingled for verification -- the right cost shape for a single
-    cold-path pipeline run (r11 opt round: 3.6s -> see
-    OPTIMIZATION_r11.md)."""
+    cold-path pipeline run."""
     from ..operators.clustering import dedup_groups
-    from ..operators.dedup import near_duplicates_minhash_inrow
+    from ..operators.dedup import near_duplicates_minhash
 
     d = load_table(spark, sf_dir, "documents")
-    pairs = near_duplicates_minhash_inrow(d, threshold=0.9)
+    pairs = near_duplicates_minhash(d, threshold=0.9)
     return dedup_groups(d.select("doc_id"), pairs)
 
 

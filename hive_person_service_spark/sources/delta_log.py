@@ -60,6 +60,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.skipping import interval_may_match
+
 
 def _log_dir(table: str) -> Path:
     return Path(table, "_delta_log")
@@ -350,19 +352,6 @@ def _prune_adds(
     }
     part_cols = set(meta.get("partitionColumns") or [])
 
-    def possible(op, lo, hi, val) -> bool:
-        if op == "=":
-            return (lo is None or not val < lo) and (hi is None or not hi < val)
-        if op == ">=":
-            return hi is None or not hi < val
-        if op == ">":
-            return hi is None or val < hi
-        if op == "<=":
-            return lo is None or not val < lo
-        if op == "<":
-            return lo is None or lo < val
-        raise ValueError(f"unsupported pruning op {op!r}")
-
     gen = _generated_sources(meta)
     by_gen_source: dict[str, list[str]] = {}
     for gcol, (src, _kind) in gen.items():
@@ -400,7 +389,7 @@ def _prune_adds(
                 raw = (add.get("partitionValues") or {}).get(col)
                 if raw is not None:
                     pv = _typed_stat(raw, t)
-                    if not possible(op, pv, pv, _typed_stat(val, t)):
+                    if not interval_may_match(op, pv, pv, _typed_stat(val, t)):
                         ok = False
                         break
                 continue
@@ -410,7 +399,7 @@ def _prune_adds(
             hi = _typed_stat((st.get("maxValues") or {}).get(col), t)
             if lo is None and hi is None:
                 continue
-            if not possible(op, lo, hi, _typed_stat(val, t)):
+            if not interval_may_match(op, lo, hi, _typed_stat(val, t)):
                 ok = False
                 break
         if ok:

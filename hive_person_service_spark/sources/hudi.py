@@ -78,6 +78,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..operators.skipping import interval_may_match
 from .avro_ocf import (
     _decoder,
     _encoder,
@@ -610,19 +611,6 @@ def _stats_may_match(entry: dict | None, skip_filters: list[tuple]) -> bool:
     if entry.get("__no_data__"):
         return False
 
-    def possible(op, lo, hi, val) -> bool:
-        if op == "=":
-            return (lo is None or not val < lo) and (hi is None or not hi < val)
-        if op == ">=":
-            return hi is None or not hi < val
-        if op == ">":
-            return hi is None or val < hi
-        if op == "<=":
-            return lo is None or not val < lo
-        if op == "<":
-            return lo is None or lo < val
-        raise ValueError(f"unsupported pruning op {op!r}")
-
     for col, op, val in skip_filters:
         st = entry.get(col)
         if st is None:
@@ -651,7 +639,7 @@ def _stats_may_match(entry: dict | None, skip_filters: list[tuple]) -> bool:
                 continue  # temporal value vs non-temporal stats: keep
             else:
                 v = str(val)
-        if not possible(op, lo, hi, v):
+        if not interval_may_match(op, lo, hi, v):
             return False
     return True
 

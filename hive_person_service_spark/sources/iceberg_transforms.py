@@ -29,6 +29,8 @@ from datetime import date, datetime, timezone
 
 import numpy as np
 
+from ..operators.skipping import interval_may_match
+
 _EPOCH = date(1970, 1, 1)
 
 # ---------------------------------------------------------------------------
@@ -257,21 +259,6 @@ def partition_value_from_dir(raw: str, result_type: str):
 _MONOTONIC = {"identity", "day", "month", "year", "truncate"}
 
 
-def _cmp_possible(op: str, lo, hi, val) -> bool:
-    """Can any value in [lo, hi] satisfy ``x op val``? lo/hi None = unknown."""
-    if op == "=":
-        return (lo is None or not val < lo) and (hi is None or not hi < val)
-    if op == ">=":
-        return hi is None or not hi < val
-    if op == ">":
-        return hi is None or val < hi
-    if op == "<=":
-        return lo is None or not val < lo
-    if op == "<":
-        return lo is None or lo < val
-    raise ValueError(f"unsupported pruning op {op!r}")
-
-
 def summary_may_match(
     filters: list[tuple[str, str, object]],
     summary: dict[str, tuple],
@@ -288,7 +275,7 @@ def summary_may_match(
     for col, op, val in filters:
         if col in summary:
             lo, hi = summary[col]
-            if not _cmp_possible(op, lo, hi, val):
+            if not interval_may_match(op, lo, hi, val):
                 return False
             continue
         ice_t = types_by_name.get(col)
@@ -304,7 +291,7 @@ def summary_may_match(
                 continue
             tv = apply_transform(val, f["transform"], ice_t)
             lo, hi = summary[f["name"]]
-            if not _cmp_possible(op, lo, hi, tv):
+            if not interval_may_match(op, lo, hi, tv):
                 return False
     return True
 
@@ -333,7 +320,7 @@ def file_may_match(
         spec_by_name = next((f for f in spec_fields if f["name"] == col), None)
         if spec_by_name is not None and col in partition:
             pv = partition[col]
-            if pv is not None and not _cmp_possible(op, pv, pv, val):
+            if pv is not None and not interval_may_match(op, pv, pv, val):
                 return False
             continue
         ice_t = types_by_name.get(col)
@@ -349,7 +336,7 @@ def file_may_match(
                 if base == "bucket" and op != "=":
                     continue
                 tv = apply_transform(val, f["transform"], ice_t)
-                if not _cmp_possible(op, pv, pv, tv):
+                if not interval_may_match(op, pv, pv, tv):
                     return False
         # column bounds
         fid = name_to_id.get(col)
@@ -359,6 +346,6 @@ def file_may_match(
         hi = (upper or {}).get(fid)
         if lo is None and hi is None:
             continue
-        if not _cmp_possible(op, lo, hi, val):
+        if not interval_may_match(op, lo, hi, val):
             return False
     return True

@@ -107,24 +107,28 @@ def test_minhash_lsh_recall_and_precision(spark):
 
 
 def test_minhash_inrow_pipeline_matches_grouped(spark):
-    """The candidate-verify in-row pipeline (bench/declared default) must
-    produce the exact pair set of the grouped-shuffle pipeline -- same
-    signature constants, same banding, so same candidates; verification is
-    exact either way."""
+    """The candidate-verify in-row pipeline (Engine.near_duplicates,
+    dedup_cluster) must produce the exact pair set of the grouped-shuffle
+    composition -- same signature constants, same banding, so same
+    candidates; verification is exact either way."""
     from hive_person_service_spark.operators.dedup import (
-        near_duplicates_minhash_inrow,
+        lsh_candidate_pairs,
+        minhash_signatures,
     )
 
     docs = load_table(spark, SF_SMALL, "documents")
+    sh = doc_shingles(docs, n=3)
     grouped = {
         (r.id_a, r.id_b, r.jaccard)
-        for r in near_duplicates_minhash(docs, threshold=0.7).collect()
+        for r in verify_jaccard(lsh_candidate_pairs(minhash_signatures(sh)), sh)
+        .where(F.col("jaccard") >= 0.7)
+        .collect()
     }
     inrow = {
         (r.id_a, r.id_b, r.jaccard)
-        for r in near_duplicates_minhash_inrow(docs, threshold=0.7).collect()
+        for r in near_duplicates_minhash(docs, threshold=0.7).collect()
     }
-    assert inrow == grouped
+    assert inrow == grouped and grouped
 
 
 def test_simhash_identical_texts_equal_signatures(spark):
@@ -518,14 +522,10 @@ def test_minhash_md5_pipeline_recall_and_precision(spark):
     brute-force truth (precision exact by construction) with usable
     recall. Exact agreement with the DuckDB replay is covered by the
     declared oracle; this pins the statistical contract independently."""
-    from hive_person_service_spark.operators.dedup import (
-        near_duplicates_minhash_md5,
-    )
-
     docs = load_table(spark, SF_SMALL, "documents")
     found = {
         (r.id_a, r.id_b): r.jaccard
-        for r in near_duplicates_minhash_md5(docs, threshold=0.7).collect()
+        for r in near_duplicates_minhash(docs, threshold=0.7, reproducible=True).collect()
     }
     shingled = doc_shingles(docs, n=3)
     cand = (

@@ -109,36 +109,35 @@ def test_minhash_inrow_equals_grouped(spark):
     assert grouped == inrow
 
 
-def test_minhash_inrow_vec_equals_expression_fold(spark):
-    # xxhash64 variant of the vectorized fold (used by dedup_cluster via
-    # near_duplicates_minhash_inrow): bit-identical to the expression fold.
+def test_minhash_md5_inrow_equals_python_reference(spark):
+    # The reproducible in-row signatures (md5 base hash, vectorized numpy
+    # fold) must equal a plain-Python replay: h = first 32 md5 bits mod
+    # 2^31-1, sig_j = min over shingles of (a_j*h + b_j) mod 2^31-1.
+    from hashlib import md5
+
     from hive_person_service_spark.operators.dedup import (
+        _perm_constants,
+        doc_shingles,
         minhash_signatures_inrow,
-        minhash_signatures_inrow_vec,
     )
     from hive_person_service_spark.sources import load_table
 
+    m = (1 << 31) - 1
+    consts = _perm_constants(32)
     docs = load_table(spark, SF_SMALL, "documents")
-    expr = minhash_signatures_inrow(docs).orderBy("doc_id").collect()
-    vec = minhash_signatures_inrow_vec(docs).orderBy("doc_id").collect()
-    assert expr == vec
-
-
-def test_minhash_md5_vec_equals_expression_fold(spark):
-    # The vectorized (numpy mapInArrow) permutation fold must be
-    # bit-identical to the JVM expression fold: same md5 base hashes,
-    # same (a, b) constants, same mod arithmetic -- only the execution
-    # strategy differs (r11 optimization round).
-    from hive_person_service_spark.operators.dedup import (
-        minhash_signatures_inrow_md5,
-        minhash_signatures_inrow_md5_vec,
-    )
-    from hive_person_service_spark.sources import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    expr = minhash_signatures_inrow_md5(docs).orderBy("doc_id").collect()
-    vec = minhash_signatures_inrow_md5_vec(docs).orderBy("doc_id").collect()
-    assert expr == vec
+    hashes: dict[int, set[int]] = {}
+    for r in doc_shingles(docs).collect():
+        h = int(md5(r.shingle.encode()).hexdigest()[:8], 16) % m
+        hashes.setdefault(r.doc_id, set()).add(h)
+    expected = {
+        i: tuple(min((a * h + b) % m for h in hs) for a, b in consts)
+        for i, hs in hashes.items()
+    }
+    got = {
+        r[0]: tuple(r[1:])
+        for r in minhash_signatures_inrow(docs, reproducible=True).collect()
+    }
+    assert got == expected and got
 
 
 def test_prefix_join_equals_full_join_and_prunes(spark):
@@ -191,7 +190,11 @@ def test_minhash_fold_slab_chunking_bit_identical(spark, monkeypatch):
     from hive_person_service_spark.sources import load_table
 
     docs = load_table(spark, SF_SMALL, "documents")
-    baseline = D.minhash_signatures_inrow_md5_vec(docs).orderBy("doc_id").collect()
+
+    def sigs():
+        return D.minhash_signatures_inrow(docs, reproducible=True).orderBy("doc_id").collect()
+
+    baseline = sigs()
     monkeypatch.setattr(D, "_FOLD_SLAB", 64)  # < one doc's shingle count
-    chunked = D.minhash_signatures_inrow_md5_vec(docs).orderBy("doc_id").collect()
+    chunked = sigs()
     assert chunked == baseline

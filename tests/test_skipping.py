@@ -4,13 +4,18 @@ synergy -- a key-sorted multi-file layout prunes, a random one does not."""
 
 from __future__ import annotations
 
+import operator
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 
 from hive_person_service_spark.operators.skipping import (
     build_stats_index,
+    interval_may_match,
     prune_files,
     skipping_scan,
 )
@@ -149,9 +154,9 @@ def test_refresh_stats_index_incremental(spark, tmp_path):
 
 
 def test_prune_files_partial_stats_row_no_crash(spark):
-    # r12 (advisor item): a stats row with exactly one known bound must
-    # behave like the old NULL-propagating SQL predicate (not provably
-    # overlapping -> prunable), never raise.
+    # a stats row with one or both bounds unknown can't prove the file
+    # misses the range, so it is kept (skipping_scan re-applies the exact
+    # predicate), and never raises
     from hive_person_service_spark.operators.skipping import prune_files
 
     stats = spark.createDataFrame(
@@ -161,11 +166,29 @@ def test_prune_files_partial_stats_row_no_crash(spark):
             ("f_min_only", "c", 0.0, None),
             ("f_unknown", "c", None, None),
             ("f_other_col", "x", 0.0, 10.0),
+            ("f_disjoint", "c", 7.0, 10.0),
         ],
         "file string, column string, min_val double, max_val double",
     )
     keep = prune_files(stats, "c", 5.0, 6.0)
-    # f_both overlaps; partial/unknown ranges are not provably
-    # overlapping (old SQL semantics); the no-stats-for-column file is
-    # kept (unknown => cannot skip)
-    assert keep == ["f_both", "f_other_col"]
+    assert keep == ["f_both", "f_max_only", "f_min_only", "f_other_col", "f_unknown"]
+
+
+_OPS = {"=": operator.eq, ">=": operator.ge, ">": operator.gt,
+        "<=": operator.le, "<": operator.lt}
+_bound = st.none() | st.integers(-20, 20)
+
+
+@settings(max_examples=400, deadline=None)
+@given(op=st.sampled_from(sorted(_OPS)), lo=_bound, hi=_bound, val=st.integers(-20, 20))
+def test_interval_may_match_sound_and_exact(op, lo, hi, val):
+    if lo is not None and hi is not None and lo > hi:
+        lo, hi = hi, lo
+    # brute force: an unknown side is unbounded (+-100 is beyond every val)
+    xs = range(-100 if lo is None else lo, (100 if hi is None else hi) + 1)
+    exists = any(_OPS[op](x, val) for x in xs)
+    got = interval_may_match(op, lo, hi, val)
+    if exists:
+        assert got  # sound: never skips a range holding a match
+    if lo is not None and hi is not None:
+        assert got == exists  # exact on fully known ranges
