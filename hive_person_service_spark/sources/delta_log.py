@@ -59,8 +59,24 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from ..operators.skipping import interval_may_match
+from .loader import local_frame, struct_of
+
+# schemas of the driver-built frames (local_frame), built once
+_RT_MAP = struct_of(("__rt_path", T.StringType()), ("__rt_base", T.LongType()),
+                    ("__rt_ver", T.LongType()))
+_DV_POSITIONS = struct_of(("__dv_path", T.StringType()), ("__dv_pos", T.LongType()))
+_POSITIONS = struct_of(("__di", T.LongType()))
+_CDC_POSITIONS = struct_of(("_cp", T.StringType()), ("_ci", T.LongType()))
+
+
+def _partition_map_schema(part_cols: list[str]) -> T.StructType:
+    """``__pfile`` plus one string column per partition column: the
+    file -> partition-values map joined onto recursive-lookup reads."""
+    return struct_of(("__pfile", T.StringType()),
+                     *((c, T.StringType()) for c in part_cols))
 
 
 def _log_dir(table: str) -> Path:
@@ -444,10 +460,8 @@ def delta_scan(
     files, meta, _, _ = _snapshot(table, version_as_of)
     files = _prune_adds(files, meta, skip_filters)
     if not files:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(meta["schemaString"]))
-        return spark.createDataFrame([], schema)
+        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+        return local_frame(spark, [], schema)
     paths = [os.path.join(table, p) for p in sorted(files)]
     part_cols = meta.get("partitionColumns") or []
     roots = {p.split(os.sep)[0] for p in files}
@@ -476,10 +490,7 @@ def delta_scan(
                 else:
                     vals.append(str(raw))
             rows.append((os.path.abspath(os.path.join(table, rel)), *vals))
-        map_schema = ", ".join(
-            ["__pfile string"] + [f"`{c}` string" for c in part_cols]
-        )
-        map_df = spark.createDataFrame(rows, map_schema)
+        map_df = local_frame(spark, rows, _partition_map_schema(part_cols))
         # recursiveFileLookup disables hive partition INFERENCE entirely
         # (the values come from the log, not the directory names)
         rdr = spark.read.option("recursiveFileLookup", "true")
@@ -547,9 +558,7 @@ def delta_scan(
              int(add.get("defaultRowCommitVersion", -1)))
             for rel, add in files.items()
         ]
-        rt_map = spark.createDataFrame(
-            rt_rows, "__rt_path string, __rt_base long, __rt_ver long"
-        )
+        rt_map = local_frame(spark, rt_rows, _RT_MAP)
         if "__p" not in df.columns:
             df = df.withColumn(
                 "__p",
@@ -587,7 +596,7 @@ def delta_scan(
         for rel, desc in dv_adds.items():
             plain = os.path.abspath(os.path.join(table, rel))
             rows.extend((plain, int(p)) for p in read_dv(table, desc))
-        dels = spark.createDataFrame(rows, "__dv_path string, __dv_pos long")
+        dels = local_frame(spark, rows, _DV_POSITIONS)
         if "__p" not in df.columns:
             # normalize file:/p, file:///p -> /p (Hadoop URI form varies)
             from pyspark.sql import functions as F  # noqa: F811
@@ -957,9 +966,7 @@ def delta_changes(
     }
 
     def posdf(positions):
-        return spark.createDataFrame(
-            [(int(i),) for i in positions], "__di long"
-        )
+        return local_frame(spark, [(int(i),) for i in positions], _POSITIONS)
 
     out_frames = []
     for piece in pieces:
@@ -1043,10 +1050,8 @@ def delta_changes(
             )
         )
     if not out_frames:
-        from pyspark.sql.types import StructType
-
-        base = StructType.fromJson(json.loads(meta["schemaString"]))
-        empty = spark.createDataFrame([], base)
+        base = T.StructType.fromJson(json.loads(meta["schemaString"]))
+        empty = local_frame(spark, [], base)
         return empty.select(
             "*",
             F.lit("insert").alias("_change_type"),
@@ -1778,10 +1783,7 @@ def _raw_tagged(spark: SparkSession, table: str, files: dict, meta: dict):
                 for c in part_cols
             ]
             rows.append((os.path.abspath(os.path.join(table, rel)), *vals))
-        map_schema = ", ".join(
-            ["__pfile string"] + [f"`{c}` string" for c in part_cols]
-        )
-        map_df = spark.createDataFrame(rows, map_schema)
+        map_df = local_frame(spark, rows, _partition_map_schema(part_cols))
         df = spark.read.option("recursiveFileLookup", "true").parquet(
             *[os.path.join(table, p) for p in paths]
         )
@@ -1948,7 +1950,7 @@ def _commit_dv_deletes(
         cdc_dir = os.path.join(table, "_change_data")
         os.makedirs(cdc_dir, exist_ok=True)
         for key in sorted(groups):
-            pdf = spark.createDataFrame(groups[key], "_cp string, _ci long")
+            pdf = local_frame(spark, groups[key], _CDC_POSITIONS)
             cdc_rows = tagged.join(
                 F.broadcast(pdf),
                 (tagged["_dv_p"] == pdf["_cp"])

@@ -327,26 +327,12 @@ def _ice_meta(table: str) -> dict:
 
 
 def _ice_schema_fields(table: str):
-    """Iceberg schema -> StructType WITHOUT _parse_datatype_string (the
-    DataSource.schema() hook runs in a sessionless Python worker)."""
-    from pyspark.sql import types as T
+    """Iceberg schema -> StructType. ``_schema_from_iceberg`` parses no
+    DDL, so it also runs in the sessionless Python worker that hosts the
+    DataSource.schema() hook."""
+    from .iceberg import _schema_from_iceberg
 
-    from .iceberg import _current_schema
-
-    type_map = {
-        "long": T.LongType(), "int": T.IntegerType(),
-        "double": T.DoubleType(), "float": T.FloatType(),
-        "string": T.StringType(), "boolean": T.BooleanType(),
-        "binary": T.BinaryType(), "date": T.DateType(),
-        "timestamp": T.TimestampType(), "timestamptz": T.TimestampType(),
-    }
-    fields = []
-    for f in _current_schema(_ice_meta(table)).get("fields", []):
-        t = f["type"]
-        if not isinstance(t, str) or t not in type_map:
-            raise ValueError(f"iceberg_tail: type {t!r} unsupported")
-        fields.append(T.StructField(f["name"], type_map[t], True))
-    return T.StructType(fields)
+    return _schema_from_iceberg(_ice_meta(table))
 
 
 def _ice_snapshot_files(table: str, idx: int) -> tuple[set, set]:

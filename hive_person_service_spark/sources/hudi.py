@@ -53,9 +53,11 @@ of metadata driver-side; the data path is always one multi-file parquet
 scan (predicate pushdown / column pruning intact).  The MOR snapshot
 merge is a per-record-key window restricted to the file groups that
 actually carry logs -- the same "merge only what changed" bound real
-MOR readers get, and the log side is decoded executor-side via
-mapInPandas over a path list whose tasks come from the local scan's
-partitioning (Arrow-batched, never on the driver).
+MOR readers get.  The log side is decoded ON THE DRIVER and enters the
+plan as an Arrow local relation, so no read starts a Python worker.
+Driver memory is bounded by the rows written since the last compaction
+(``hudi_compact`` folds the logs into new base files and resets it),
+the same order as the batch rows ``hudi_write`` already holds there.
 
 SURVEY.md §2.A row: open-table-format interop (third format).  The
 judge-facing queries live in plans/pipeline46.py.
@@ -69,9 +71,6 @@ import os
 import re
 import struct as _struct
 import uuid
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,6 +85,7 @@ from .avro_ocf import (
     _records_to_pdf,
     spark_to_avro_schema,
 )
+from .loader import local_frame, struct_of
 
 # ---------------------------------------------------------------------------
 # constants (public layout names)
@@ -1444,36 +1444,25 @@ def hudi_compact(spark: SparkSession, table: str,
 # ---------------------------------------------------------------------------
 
 
-#: Inferred-schema cache for base-file reads, keyed on the exact file set
-#: and validated by (mtime_ns, size) per file. Hudi base files are
-#: immutable at a path (names embed the writing instant), so repeated
-#: reads of the same slice set -- every warm bench rep, every face of the
-#: same table in one session -- can skip footer-based schema inference
-#: (~70-100 ms of driver-side JVM work per read at fixture scale). This
-#: caches METADATA only, never data or results; the stat validation keeps
-#: it correct even under restore-style timeline rewrites. Same discipline
-#: as loader._events_ts_kind. Bounded LRU.
-_BASE_SCHEMA_CACHE: dict[tuple, tuple] = {}
+#: Footer key under which Spark's parquet writer stores the Spark schema
+#: as JSON; Spark's own footer inference takes the schema from it.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _read_base(spark: SparkSession, table: str, files: list[str]) -> DataFrame:
-    key = tuple(sorted(files))
-    try:
-        sig = tuple(
-            (st.st_mtime_ns, st.st_size) for st in map(os.stat, key)
-        )
-    except OSError:
+    """One parquet scan over base files, read with a DECLARED schema so
+    building it starts no schema-inference job. The schema is the Spark
+    schema in the footer of the first file by path -- the file and the
+    key Spark's inference would read. Files without that key (written
+    by something other than Spark) fall back to inference."""
+    import pyarrow.parquet as papq
+
+    kv = papq.read_metadata(min(files)).metadata if files else None
+    declared = (kv or {}).get(_SPARK_SCHEMA_KEY)
+    if declared is None:
         return spark.read.parquet(*files)
-    hit = _BASE_SCHEMA_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        # LRU: a hit moves the key to the end, away from eviction
-        _BASE_SCHEMA_CACHE[key] = _BASE_SCHEMA_CACHE.pop(key)
-        return spark.read.schema(hit[1]).parquet(*files)
-    df = spark.read.parquet(*files)
-    if len(_BASE_SCHEMA_CACHE) >= 256:
-        _BASE_SCHEMA_CACHE.pop(next(iter(_BASE_SCHEMA_CACHE)))
-    _BASE_SCHEMA_CACHE[key] = (sig, df.schema)
-    return df
+    schema = T.StructType.fromJson(json.loads(declared))
+    return spark.read.schema(schema).parquet(*files)
 
 
 def _latest_per_key(df: DataFrame) -> DataFrame:
@@ -1499,9 +1488,12 @@ def _latest_per_key(df: DataFrame) -> DataFrame:
 def _merge_slices(spark: SparkSession, table: str, slices: dict[str, dict]) -> DataFrame:
     """Snapshot of the given MOR file groups: base rows + decoded log
     rows, merged per record key (latest commit wins), delete blocks
-    honored.  Log decode runs executor-side: mapInPandas over a local
-    DataFrame of log paths (its scan splits the list into min(#files,
-    default parallelism) tasks), each task opening its files directly.
+    honored.  The logs are decoded on the driver and join the plan as an
+    Arrow local relation (``LocalTableScan``): no Python worker starts.
+    The driver holds every log record of the given groups at once, which
+    is bounded by the rows written since the last compaction --
+    ``hudi_compact`` resets it, and ``hudi_write`` holds each batch's
+    updated rows on the driver already.
 
     Only file groups that actually CARRY logs go through the per-key
     merge window (r12: the code now matches this long-documented bound).
@@ -1525,43 +1517,32 @@ def _merge_slices(spark: SparkSession, table: str, slices: dict[str, dict]) -> D
     out_schema = T.StructType(
         list(schema.fields) + [T.StructField("_hoodie_is_deleted", T.BooleanType())]
     )
-    schema_names = [f.name for f in schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                # Hudi log files are dot-prefixed, which Spark's file
-                # listing treats as hidden and silently drops -- so the
-                # bytes are opened directly in the task (one file per
-                # input row), the same move the WARC source makes.
-                with open(path, "rb") as fh:
-                    blob = fh.read()
-                for btype, header, content in _read_log_blocks(blob):
-                    instant = header.get(HEADER_INSTANT_TIME, "")
-                    if btype == BLOCK_AVRO_DATA:
-                        avro_schema = json.loads(header[HEADER_SCHEMA])
-                        recs = _decode_avro_data(content, avro_schema)
-                        out = _records_to_pdf(recs, schema)
-                        out["_hoodie_is_deleted"] = False
-                    elif btype == BLOCK_DELETE:
-                        recs = _decode_avro_data(content, _DELETE_SCHEMA)
-                        out = pd.DataFrame(
-                            {name: pd.Series([None] * len(recs), dtype="object")
-                             for name in schema_names}
-                        )
-                        out["_hoodie_record_key"] = [r["recordKey"] for r in recs]
-                        out["_hoodie_commit_time"] = instant
-                        out["_hoodie_commit_seqno"] = instant + "_del"
-                        out["_hoodie_is_deleted"] = True
-                    else:
-                        continue
-                    yield out
-
-    # the local scan of the path list already splits it into
-    # min(#files, default parallelism) tasks: no repartition shuffle
-    logs = spark.createDataFrame(
-        [(p,) for p in log_files], "path string"
-    ).mapInPandas(decode, schema=out_schema)
+    blank = dict.fromkeys(schema.fieldNames())
+    records: list[dict] = []
+    for path in log_files:
+        # Hudi log files are dot-prefixed, which Spark's file listing
+        # treats as hidden and silently drops -- so the bytes are opened
+        # directly, as _log_file_column_stats and _file_record_keys do
+        with open(path, "rb") as fh:
+            blob = fh.read()
+        for btype, header, content in _read_log_blocks(blob):
+            if btype == BLOCK_AVRO_DATA:
+                avro_schema = json.loads(header[HEADER_SCHEMA])
+                records.extend(
+                    {**r, "_hoodie_is_deleted": False}
+                    for r in _decode_avro_data(content, avro_schema)
+                )
+            elif btype == BLOCK_DELETE:
+                instant = header.get(HEADER_INSTANT_TIME, "")
+                records.extend(
+                    {**blank,
+                     "_hoodie_record_key": r["recordKey"],
+                     "_hoodie_commit_time": instant,
+                     "_hoodie_commit_seqno": instant + "_del",
+                     "_hoodie_is_deleted": True}
+                    for r in _decode_avro_data(content, _DELETE_SCHEMA)
+                )
+    logs = local_frame(spark, _records_to_pdf(records, out_schema), out_schema)
     merged = _latest_per_key(
         base.withColumn("_hoodie_is_deleted", F.lit(False)).unionByName(logs)
     )
@@ -1701,6 +1682,7 @@ def hudi_cluster(spark: SparkSession, table: str, sort_col: str,
 # ---------------------------------------------------------------------------
 
 _RECORD_INDEX_REL = os.path.join(META_DIR, "metadata", "record_index")
+_VICTIM_SCHEMA = struct_of(("record_key", T.StringType()))
 
 
 def _record_index_dir(table: str) -> str:
@@ -1772,7 +1754,7 @@ def _record_index_lookup(spark: SparkSession, table: str,
     if not keys:
         return {}
     idx = spark.read.parquet(d)
-    victims = spark.createDataFrame([(k,) for k in keys], "record_key string")
+    victims = local_frame(spark, [(k,) for k in keys], _VICTIM_SCHEMA)
     hits = (
         idx.join(F.broadcast(victims), "record_key")
         .select("record_key", "partition_path")

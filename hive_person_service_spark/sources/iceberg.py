@@ -103,8 +103,19 @@ from pathlib import Path
 import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from .avro_ocf import read_ocf, write_ocf
+from .loader import local_frame, struct_of
+
+# schemas of the driver-built frames (local_frame), built once
+_PATH_MAP = struct_of(("file_path", T.StringType()), ("plain", T.StringType()))
+_DV_POSITIONS = struct_of(("__del_path", T.StringType()), ("__del_pos", T.LongType()))
+_FILE_SEQ = struct_of(("___path", T.StringType()), ("__seq", T.LongType()))
+_ROW_LINEAGE = struct_of(("__rl_path", T.StringType()), ("__rl_first", T.LongType()),
+                         ("__rl_seq", T.LongType()))
+_DROPPED = struct_of(("__dp", T.StringType()))
+_POSITIONS = struct_of(("__di", T.LongType()))
 
 # ---------------------------------------------------------------------------
 # metadata discovery
@@ -489,9 +500,7 @@ def _live_tagged(
             if (plain := _resolve(table, p)) not in plan["dv"]
         ]
         if mapping:
-            map_df = spark.createDataFrame(
-                mapping, "file_path string, plain string"
-            )
+            map_df = local_frame(spark, mapping, _PATH_MAP)
             dels = dels.join(F.broadcast(map_df), "file_path").select(
                 F.col("plain").alias("__del_path"),
                 F.col("pos").alias("__del_pos"),
@@ -520,9 +529,8 @@ def _live_tagged(
             if ref in data_paths  # DV for a retired file: nothing to do
         ]
         if frames:
-            dv_df = spark.createDataFrame(
-                pd.concat(frames, ignore_index=True),
-                "__del_path string, __del_pos long",
+            dv_df = local_frame(
+                spark, pd.concat(frames, ignore_index=True), _DV_POSITIONS
             )
             df = df.join(
                 F.broadcast(dv_df),
@@ -535,9 +543,8 @@ def _live_tagged(
         # strict seq < delete-seq rule can exempt rows appended AFTER the
         # delete (the CDC upsert shape); the file->seq map is metadata-
         # sized and broadcast
-        seq_df = spark.createDataFrame(
-            [(p, s) for p, s, _i in plan["data"]],
-            "___path string, __seq long",
+        seq_df = local_frame(
+            spark, [(p, s) for p, s, _i in plan["data"]], _FILE_SEQ
         )
         df = df.join(
             F.broadcast(seq_df), df["__p"] == seq_df["___path"], "left"
@@ -642,7 +649,7 @@ def iceberg_scan(
     df, plan = _live_tagged(spark, table, meta, snapshot_id, skip_filters,
                             merge_schema=with_row_lineage)
     if df is None:
-        return spark.createDataFrame([], _schema_from_iceberg(meta))
+        return local_frame(spark, [], _schema_from_iceberg(meta))
     if with_row_lineage:
         rl_rows = [
             (os.path.abspath(p),
@@ -651,9 +658,7 @@ def iceberg_scan(
              int(seq))
             for p, seq, info in plan["data"]
         ]
-        rl_map = spark.createDataFrame(
-            rl_rows, "__rl_path string, __rl_first long, __rl_seq long"
-        )
+        rl_map = local_frame(spark, rl_rows, _ROW_LINEAGE)
         df = df.join(F.broadcast(rl_map), F.col("__p") == F.col("__rl_path"))
         mat_id = (F.col("_row_id") if "_row_id" in df.columns
                   else F.lit(None).cast("long"))
@@ -1036,10 +1041,14 @@ def iceberg_partitions(
 # schema mapping (Iceberg JSON <-> Spark)
 # ---------------------------------------------------------------------------
 
+# Spark types as objects, not DDL strings: building a schema from them
+# needs no JVM parse (and no session, for sessionless Python workers)
 _ICE_TO_SPARK = {
-    "long": "long", "int": "integer", "double": "double", "float": "float",
-    "string": "string", "boolean": "boolean", "binary": "binary",
-    "date": "date", "timestamp": "timestamp", "timestamptz": "timestamp",
+    "long": T.LongType(), "int": T.IntegerType(), "double": T.DoubleType(),
+    "float": T.FloatType(), "string": T.StringType(),
+    "boolean": T.BooleanType(), "binary": T.BinaryType(),
+    "date": T.DateType(), "timestamp": T.TimestampType(),
+    "timestamptz": T.TimestampType(),
 }
 _SPARK_TO_ICE = {
     "long": "long", "integer": "int", "double": "double", "float": "float",
@@ -1060,8 +1069,6 @@ def _current_schema(meta: dict) -> dict:
 
 
 def _schema_from_iceberg(meta: dict, with_field_ids: bool = False):
-    from pyspark.sql.types import StructField, StructType, _parse_datatype_string
-
     schema = _current_schema(meta)
     fields = []
     for f in schema.get("fields", []):
@@ -1070,14 +1077,9 @@ def _schema_from_iceberg(meta: dict, with_field_ids: bool = False):
             raise ValueError(f"Iceberg type {t!r} unsupported in minimal client")
         md = {"parquet.field.id": f["id"]} if with_field_ids else None
         fields.append(
-            StructField(
-                f["name"],
-                _parse_datatype_string(_ICE_TO_SPARK[t]),
-                nullable=True,
-                metadata=md,
-            )
+            T.StructField(f["name"], _ICE_TO_SPARK[t], nullable=True, metadata=md)
         )
-    return StructType(fields)
+    return T.StructType(fields)
 
 
 def _schema_to_iceberg(struct) -> dict:
@@ -2282,9 +2284,7 @@ def iceberg_changes(
                 spark, table, meta, ids[idx - 1] if idx - 1 >= 0 else None
             )
             if live_prev is not None:
-                drop_df = spark.createDataFrame(
-                    [(p,) for p in dropped], "__dp string"
-                )
+                drop_df = local_frame(spark, [(p,) for p in dropped], _DROPPED)
                 gone = live_prev.join(
                     F.broadcast(drop_df),
                     live_prev["__p"] == drop_df["__dp"],
@@ -2298,9 +2298,7 @@ def iceberg_changes(
                 for r in dels.select("file_path").distinct().collect()
             ]
             mapping = [(p, _resolve(table, p)) for p in referenced]
-            map_df = spark.createDataFrame(
-                mapping, "file_path string, plain string"
-            )
+            map_df = local_frame(spark, mapping, _PATH_MAP)
             dels = dels.join(F.broadcast(map_df), "file_path").select(
                 F.col("plain").alias("__dp"), F.col("pos").alias("__di")
             )
@@ -2368,7 +2366,7 @@ def iceberg_changes(
             raw = spark.read.parquet(ref).withColumn(
                 "__i", F.col("_metadata.row_index")
             )
-            pos_df = spark.createDataFrame([(int(i),) for i in newly], "__di long")
+            pos_df = local_frame(spark, [(int(i),) for i in newly], _POSITIONS)
             hit = raw.join(
                 F.broadcast(pos_df), raw["__i"] == pos_df["__di"], "left_semi"
             ).drop("__i")
@@ -2377,7 +2375,7 @@ def iceberg_changes(
             cur_files, cur_pos, cur_eq, cur_dv,
         )
     if not frames:
-        base = spark.createDataFrame([], _schema_from_iceberg(meta))
+        base = local_frame(spark, [], _schema_from_iceberg(meta))
         return base.select(
             "*",
             F.lit("insert").alias("_change_type"),

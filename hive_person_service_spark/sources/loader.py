@@ -16,8 +16,12 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructField, StructType
 
 from ..session import configure
 from .schemas import SCHEMAS
@@ -67,6 +71,36 @@ def _events_ts_kind(spark: SparkSession, path: str) -> str:
     if key is not None:
         _EVENTS_TS_KIND[key] = kind
     return kind
+
+
+def struct_of(*fields: tuple[str, DataType]) -> StructType:
+    """A StructType of nullable fields from (name, type) pairs, built in
+    Python: no JVM round trip, unlike a DDL string."""
+    return StructType([StructField(n, t) for n, t in fields])
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
+    """A frame over data the driver already holds -- a sequence of tuples
+    in ``schema`` order, or a pandas DataFrame with ``schema``'s columns --
+    built through Arrow so it plans as a Catalyst ``LocalTableScan``.
+
+    In classic PySpark ``createDataFrame(list, ...)`` is a pickled-row RDD
+    (``Scan ExistingRDD``) whose tasks run in Python workers, and a pandas
+    input falls back to that path when
+    ``spark.sql.execution.arrow.pyspark.enabled`` is off; a ``pyarrow.Table``
+    becomes a local relation either way, and building or running it starts
+    no Python process. ``schema`` is a ``StructType``, not a DDL string: a
+    DDL string costs a JVM parse per call."""
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(rows, pd.DataFrame):
+        table = pa.Table.from_pandas(rows, schema=arrow_schema, preserve_index=False)
+    else:
+        cols = list(zip(*rows)) or [()] * len(arrow_schema)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

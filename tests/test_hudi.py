@@ -758,44 +758,38 @@ def test_hudi_ingest_crash_between_commit_and_checkpoint(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r12: schema-cache invalidation + log-bearing-groups-only merge
+# r12: declared base schema over new commits + log-bearing-groups-only merge
 # ---------------------------------------------------------------------------
 
 
-def test_read_base_schema_cache_sees_new_commits(spark, people, tmp_path):
-    # The inferred-schema cache is keyed on the exact (immutable) file
-    # set: a new commit writes NEW file names, so a repeated scan after
-    # an append must see the fresh rows (cache refresh, not staleness).
+def test_read_base_declared_schema_sees_new_commits(spark, people, tmp_path):
+    # The base-file schema is declared from the current files' footers on
+    # every read: a new commit writes NEW file names, so a repeated scan
+    # after an append must see the fresh rows.
     t = _fresh(tmp_path, "cache_inval")
     hudi_write(spark, t, people.where("id <= 50"), record_key="id")
     assert hudi_scan(spark, t).count() == 50
-    assert hudi_scan(spark, t).count() == 50  # warm: schema from cache
+    assert hudi_scan(spark, t).count() == 50
     hudi_write(spark, t, people.where("id > 50"), record_key="id")
     got = hudi_scan(spark, t)
     assert got.count() == 100
     assert got.agg(F.sum("id")).first()[0] == sum(range(1, 101))
 
-    # LRU, not FIFO: a file set read on every pass survives 256 one-off
-    # inserts (FIFO evicts it at the 256th). The one-off reads go through
-    # a stand-in session, so they cost no Spark job.
-    from types import SimpleNamespace
 
-    from hive_person_service_spark.sources import hudi as hudi_mod
+def test_read_base_infers_schema_without_spark_footer(spark, tmp_path):
+    # a base file written by something other than Spark carries no Spark
+    # schema in its footer: the read falls back to inference
+    import pyarrow as pa
+    import pyarrow.parquet as papq
 
-    cache = hudi_mod._BASE_SCHEMA_CACHE
-    cache.clear()
-    hudi_scan(spark, t)
-    (hot,) = cache
-    stand_in = SimpleNamespace(
-        read=SimpleNamespace(parquet=lambda *f: SimpleNamespace(schema=None))
-    )
-    for i in range(256):
-        one_off = tmp_path / f"one_off_{i}.parquet"
-        one_off.write_bytes(b"")
-        hudi_mod._read_base(stand_in, t, [str(one_off)])
-        hudi_mod._read_base(spark, t, list(hot))
-    assert hot in cache and len(cache) == 256
-    cache.clear()
+    from hive_person_service_spark.sources.hudi import _read_base
+
+    f = str(tmp_path / "plain.parquet")
+    papq.write_table(pa.table({"id": [2, 1], "s": ["a", None]}), f)
+    df = _read_base(spark, str(tmp_path), [f])
+    assert [(c.name, c.dataType.simpleString()) for c in df.schema] == [
+        ("id", "bigint"), ("s", "string")]
+    assert sorted(r.id for r in df.collect()) == [1, 2]
 
 
 def test_mor_merge_windows_only_log_bearing_groups(spark, people, tmp_path):

@@ -1,4 +1,5 @@
-"""Spark jobs per lake call, pinned as upper bounds.
+"""Spark jobs per lake call, pinned as upper bounds, and no Python
+worker behind the frames a lake read builds.
 
 The lake clients answer what their metadata already holds -- schema, row
 counts, file layout -- on the driver, and start Spark jobs only for the
@@ -7,6 +8,11 @@ the group started must not exceed the census taken when the redundant
 jobs were removed (footer-inference reads, a separate source count, the
 Hudi log repartition and per-file-group collects). A change that adds a
 job back fails here.
+
+The frames the clients build from driver-side metadata (file maps,
+deletion-vector positions, decoded Hudi logs) are Arrow local relations,
+so reading a table starts no Python worker: a plan node that needs one
+fails here too.
 """
 
 from __future__ import annotations
@@ -20,7 +26,7 @@ import pytest
 BOUNDS = {
     "delta.scan_build": 0,
     "iceberg.scan_build": 0,
-    "hudi.scan_build": 0,  # warm: the base-file schema is cached
+    "hudi.scan_build": 0,
     "delta.merge": 7,
     "iceberg.merge": 10,
     "hudi.merge": 4,
@@ -31,6 +37,17 @@ BOUNDS = {
     "iceberg.maintain": 4,
     "hudi.maintain": 3,
 }
+
+
+# plan nodes whose execution needs a Python worker: pickled-row scans
+# (createDataFrame over a list), pandas/Arrow maps and Python UDFs
+PYTHON_NODES = ("ExistingRDD", "MapInPandas", "ArrowEvalPython",
+                "BatchEvalPython", "PythonUDF")
+
+
+def _python_nodes(df) -> list[str]:
+    plans = df._jdf.queryExecution().toString()
+    return [n for n in PYTHON_NODES if n in plans]
 
 
 def _jobs(spark, call: str, fn):
@@ -108,8 +125,15 @@ def test_lake_calls_start_no_more_jobs_than_census(spark, tables):
     seen = {}
     for fmt in ("delta", "iceberg", "hudi"):
         _, seen[f"{fmt}.merge"] = _jobs(spark, f"{fmt}.merge", merges[fmt])
-        scans[fmt]()  # warms the Hudi base-file schema cache
         df, seen[f"{fmt}.scan_build"] = _jobs(spark, f"{fmt}.scan_build", scans[fmt])
+        assert not _python_nodes(df), (fmt, _python_nodes(df))
+        if fmt == "hudi":
+            # the compaction's input: the merged log-bearing file groups
+            logged = {f: s for f, s in hudi._file_slices(tables["hudi"]).items()
+                      if s["logs"]}
+            assert logged
+            compact_in = hudi._merge_slices(spark, tables["hudi"], logged)
+            assert not _python_nodes(compact_in), _python_nodes(compact_in)
         rows, seen[f"{fmt}.full_read"] = _jobs(
             spark, f"{fmt}.full_read", lambda: df.select("k", "v").collect())
         assert {r.k: r.v for r in rows} == want, fmt

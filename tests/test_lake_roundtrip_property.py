@@ -1,9 +1,9 @@
-"""Seeded differential property test for the two table-format clients:
+"""Seeded differential property test for the table-format clients:
 random dataframes (mixed types, nulls, duplicate keys) written through
-Delta and Iceberg must scan back EXACTLY; random row-level deletes must
-equal the equivalent filter on the source; merge must equal the
-upsert reference computed relationally. One property run per seed, both
-formats per seed -- the lake twin of the SQL fuzzer (tools/fuzz.py).
+Delta, Iceberg and Hudi (MOR) must scan back EXACTLY; random row-level
+deletes must equal the equivalent filter on the source; merge must equal
+the upsert reference computed relationally. One property run per seed,
+every format per seed -- the lake twin of the SQL fuzzer (tools/fuzz.py).
 Every table written must also declare the schema Spark infers from its
 data files' footers: the scans read with the declared schema."""
 
@@ -48,6 +48,11 @@ def _assert_declared_is_inferred(spark, fmt: str, table: str) -> None:
 
         files = [os.path.join(table, p) for p in _snapshot(table)[0]]
         declared = delta_scan(spark, table).schema
+    elif fmt == "hudi":
+        from hive_person_service_spark.sources.hudi import _file_slices, hudi_scan
+
+        files = [s["base"] for s in _file_slices(table).values() if s["base"]]
+        declared = hudi_scan(spark, table, drop_meta=False).schema
     else:
         from hive_person_service_spark.sources.iceberg import (
             _load_metadata,
@@ -79,6 +84,7 @@ def test_roundtrip_and_delete_both_formats(spark, tmp_path, seed):
         delta_scan,
         delta_write,
     )
+    from hive_person_service_spark.sources.hudi import hudi_delete, hudi_scan, hudi_write
     from hive_person_service_spark.sources.iceberg import (
         iceberg_delete,
         iceberg_scan,
@@ -92,22 +98,29 @@ def test_roundtrip_and_delete_both_formats(spark, tmp_path, seed):
 
     dt = str(tmp_path / f"d{seed}")
     it = str(tmp_path / f"i{seed}")
+    ht = str(tmp_path / f"h{seed}")
     delta_write(src.repartition(3), dt)
-    # the Iceberg client has no decimal type
+    # the Iceberg and Hudi clients have no decimal type
     iceberg_write(src.drop("price").repartition(3), it)
+    hudi_write(spark, ht, src.drop("price"), record_key="id", table_type="mor")
     assert _collect(delta_scan(spark, dt)) == _collect(src)
     assert _collect(iceberg_scan(spark, it)) == _collect(src)
+    assert _collect(hudi_scan(spark, ht)) == _collect(src)
     assert delta_scan(spark, dt).exceptAll(src).count() == 0
-    _assert_declared_is_inferred(spark, "delta", dt)
-    _assert_declared_is_inferred(spark, "iceberg", it)
+    assert hudi_scan(spark, ht).exceptAll(src.drop("price")).count() == 0
+    for fmt, table in (("delta", dt), ("iceberg", it), ("hudi", ht)):
+        _assert_declared_is_inferred(spark, fmt, table)
 
     expected = _collect(src.where(f"NOT ({pred}) OR ({pred}) IS NULL"))
     delta_delete(spark, dt, pred)
     iceberg_delete(spark, it, pred)
+    # MOR: the deletes land as DELETE log blocks
+    hudi_delete(spark, ht, [str(r.id) for r in src.where(pred).collect()])
     assert _collect(delta_scan(spark, dt)) == expected
     assert _collect(iceberg_scan(spark, it)) == expected
-    _assert_declared_is_inferred(spark, "delta", dt)
-    _assert_declared_is_inferred(spark, "iceberg", it)
+    assert _collect(hudi_scan(spark, ht)) == expected
+    for fmt, table in (("delta", dt), ("iceberg", it), ("hudi", ht)):
+        _assert_declared_is_inferred(spark, fmt, table)
 
 
 @pytest.mark.parametrize("seed", [5, 23])
@@ -119,6 +132,7 @@ def test_merge_matches_relational_reference(spark, tmp_path, seed):
         delta_scan,
         delta_write,
     )
+    from hive_person_service_spark.sources.hudi import hudi_scan, hudi_write
     from hive_person_service_spark.sources.iceberg import (
         iceberg_merge,
         iceberg_scan,
@@ -145,15 +159,23 @@ def test_merge_matches_relational_reference(spark, tmp_path, seed):
     )
 
     dt, it = str(tmp_path / f"dm{seed}"), str(tmp_path / f"im{seed}")
+    ht = str(tmp_path / f"hm{seed}")
     delta_write(base.repartition(3), dt)
     iceberg_write(base.drop("price").repartition(3), it)
+    hudi_write(spark, ht, base.drop("price"), record_key="id", table_type="mor")
     rd = delta_merge(spark, dt, source, keys=["id"])
     ri = iceberg_merge(spark, it, source.drop("price"), keys=["id"])
+    # MOR upsert: the updates land as log blocks decoded at read time
+    hudi_write(spark, ht, source.drop("price"), record_key="id", table_type="mor")
     assert rd == ri == {"updated": 40, "inserted": 15}
     assert _collect(delta_scan(spark, dt)) == ref
     assert _collect(iceberg_scan(spark, it)) == ref
-    _assert_declared_is_inferred(spark, "delta", dt)
-    _assert_declared_is_inferred(spark, "iceberg", it)
+    assert _collect(hudi_scan(spark, ht)) == ref
+    # every column, dates and timestamps included, survives the log decode
+    want = base.join(source.select("id"), "id", "left_anti").unionByName(source)
+    assert hudi_scan(spark, ht).exceptAll(want.drop("price")).count() == 0
+    for fmt, table in (("delta", dt), ("iceberg", it), ("hudi", ht)):
+        _assert_declared_is_inferred(spark, fmt, table)
 
 
 def test_evolved_iceberg_declares_inferred_schema(spark, tmp_path):
