@@ -13,14 +13,22 @@ mapInPandas over file paths, each task reading footers with pyarrow -- so
 indexing a 100 TB / 100k-file table moves ~GBs of footer, not the table.
 The index itself (files x columns rows) is tiny; persist it as parquet and
 broadcast it for pruning decisions.
+
+The module also holds the two kernels every lake format's skipping shares:
+``footer_ranges`` (the write-side fold of footer statistics) and
+``interval_may_match`` (the read-side interval test).
 """
 
 from __future__ import annotations
 
+import datetime as _dt
+import sys
 from collections.abc import Iterator, Sequence
+from decimal import Decimal
 from pathlib import Path
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,6 +45,11 @@ STATS_SCHEMA = T.StructType(
 )
 
 
+# The footer reader runs in Python workers, which need not be able to
+# import this package: pickle this module's functions by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
 def _list_parquet_files(table_path: str) -> list[str]:
     p = Path(table_path)
     if p.is_file():
@@ -44,51 +57,96 @@ def _list_parquet_files(table_path: str) -> list[str]:
     return sorted(str(f) for f in p.rglob("*.parquet") if f.is_file())
 
 
+def footer_ranges(path: str) -> tuple[int, dict[str, tuple]]:
+    """``(num_rows, {column: (lo, hi, nulls)})`` for one parquet file, from
+    its FOOTER alone: the one fold over row-group statistics that every
+    writer's stats share (Delta ``stats``, Iceberg bounds, Hudi column
+    stats, the raw-parquet index), each encoding ``lo``/``hi`` its own way.
+
+    One rule for every format. Only top-level columns are folded; ``lo``
+    and ``hi`` are the raw pyarrow values, compared as such. A row group
+    where the column is all null adds only its nulls. Any other row group
+    without usable min/max -- no statistics, ``has_min_max`` false (parquet
+    writers drop min/max for long strings), or values pyarrow cannot
+    decode (e.g. decimal) -- makes the column's range unknown for the
+    whole file: ``lo = hi = None``, which no skipping test ever prunes on.
+    A column that is null in every row group also gets ``None`` bounds.
+    ``nulls`` is None when some row group lacks a null count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    acc: dict[str, list] = {}  # column -> [lo, hi, nulls, range_known]
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            c = g.column(ci)
+            name = c.path_in_schema
+            if "." in name:
+                continue  # nested leaf: skipping is top-level only
+            a = acc.setdefault(name, [None, None, 0, True])
+            st = c.statistics
+            n = st.null_count if st is not None and st.has_null_count else None
+            a[2] = None if a[2] is None or n is None else a[2] + n
+            if n == g.num_rows:
+                continue  # all null: no values to bound
+            try:
+                usable = st is not None and st.has_min_max
+                lo, hi = (st.min, st.max) if usable else (None, None)
+            except (pa.ArrowException, ValueError):  # undecodable type
+                lo = hi = None
+            if lo is None or hi is None:
+                a[3] = False
+            elif a[3]:
+                a[0] = lo if a[0] is None or lo < a[0] else a[0]
+                a[1] = hi if a[1] is None or hi > a[1] else a[1]
+    return md.num_rows, {
+        name: (lo, hi, nulls) if known else (None, None, nulls)
+        for name, (lo, hi, nulls, known) in acc.items()
+    }
+
+
+def json_stat(v):
+    """One bound as a JSON scalar, the value encoding Delta ``stats`` and
+    Hudi column stats share: numbers, bools and strings pass through;
+    datetimes become UTC-naive fixed-width ISO micros and dates ISO days
+    (so string compare is chronological); anything else (bytes, decimal)
+    is None = unknown."""
+    if v is None or isinstance(v, (bool, int, float, str)):
+        return v
+    if isinstance(v, _dt.datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+        return v.strftime("%Y-%m-%dT%H:%M:%S.%f")
+    if isinstance(v, _dt.date):
+        return v.isoformat()
+    return None
+
+
+def _as_double(v) -> float | None:
+    """The raw index's bound encoding: numbers as floats, datetimes as
+    epoch micros; any other type is unknown (None)."""
+    if isinstance(v, _dt.datetime):
+        return v.timestamp() * 1e6
+    if isinstance(v, (int, float, Decimal)):
+        return float(v)
+    return None
+
+
 def _footer_reader(cols: list[str]):
     """mapInPandas worker factory: path batches -> per-(file, column) stats
-    rows, reading parquet footers only."""
+    rows, one per requested column the file holds."""
 
     def _read_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
         for batch in batches:
-            out: list[dict] = []
+            out: list[tuple] = []
             for path in batch["path"]:
-                md = pq.read_metadata(path)
-                agg: dict[str, dict] = {}
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        c = g.column(ci)
-                        name = c.path_in_schema
-                        if name not in cols:
-                            continue
-                        st = c.statistics
-                        if st is None or not st.has_min_max:
-                            continue
-                        lo, hi = st.min, st.max
-                        if hasattr(lo, "timestamp"):  # datetime -> epoch us
-                            lo, hi = lo.timestamp() * 1e6, hi.timestamp() * 1e6
-                        lo, hi = float(lo), float(hi)
-                        a = agg.setdefault(
-                            name,
-                            {"lo": lo, "hi": hi, "nulls": 0, "rows": 0},
-                        )
-                        a["lo"] = min(a["lo"], lo)
-                        a["hi"] = max(a["hi"], hi)
-                        a["nulls"] += st.null_count or 0
-                        a["rows"] += g.num_rows
-                for name, a in agg.items():
-                    out.append(
-                        {
-                            "file": path,
-                            "column": name,
-                            "min_val": a["lo"],
-                            "max_val": a["hi"],
-                            "null_count": a["nulls"],
-                            "num_rows": a["rows"],
-                        }
-                    )
+                num_rows, ranges = footer_ranges(path)
+                out.extend(
+                    (path, name, _as_double(lo), _as_double(hi), nulls, num_rows)
+                    for name, (lo, hi, nulls) in ranges.items()
+                    if name in cols
+                )
             yield pd.DataFrame(
                 out, columns=[f.name for f in STATS_SCHEMA.fields]
             )
@@ -96,20 +154,27 @@ def _footer_reader(cols: list[str]):
     return _read_footers
 
 
-def build_stats_index(
-    spark: SparkSession, table_path: str, columns: Sequence[str]
+def _index_files(
+    spark: SparkSession, files: Sequence[str], columns: Sequence[str]
 ) -> DataFrame:
-    """Per-file min/max/null-count for numeric/temporal `columns`, from
-    parquet footer metadata. Distributed over the file list (one task per
-    path batch); each row-group's statistics fold into a file-level range.
-    Timestamps index as epoch micros so one DoubleType range column serves
-    every orderable type (lossless for the fixture domains; a production
-    index would keep per-type columns)."""
-    files = _list_parquet_files(table_path)
+    """Stats rows for ``files``: the file list is distributed (one task
+    per path batch) and each task reads only footers."""
     paths = spark.createDataFrame(
         [(f,) for f in files], T.StructType([T.StructField("path", T.StringType())])
     ).repartition(min(len(files), 32))
     return paths.mapInPandas(_footer_reader(list(columns)), STATS_SCHEMA)
+
+
+def build_stats_index(
+    spark: SparkSession, table_path: str, columns: Sequence[str]
+) -> DataFrame:
+    """Per-file min/max/null-count for numeric/temporal `columns`, from
+    parquet footer metadata (``footer_ranges``: a column whose range is
+    unknown in some row group gets null min/max, which pruning keeps).
+    Timestamps index as epoch micros so one DoubleType range column serves
+    every orderable type (lossless for the fixture domains; a production
+    index would keep per-type columns); other types index as null."""
+    return _index_files(spark, _list_parquet_files(table_path), columns)
 
 
 def refresh_stats_index(
@@ -134,14 +199,7 @@ def refresh_stats_index(
     new_files = sorted(current - known)
     if not new_files:
         return kept
-    paths = spark.createDataFrame(
-        [(f,) for f in new_files],
-        T.StructType([T.StructField("path", T.StringType())]),
-    ).repartition(min(len(new_files), 32))
-    fresh = paths.mapInPandas(
-        _footer_reader(list(columns)), STATS_SCHEMA
-    )
-    return kept.unionByName(fresh)
+    return kept.unionByName(_index_files(spark, new_files, columns))
 
 
 def interval_may_match(op: str, lo, hi, val) -> bool:

@@ -61,8 +61,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..operators.skipping import interval_may_match
-from .loader import local_frame, struct_of
+from ..operators.skipping import footer_ranges, interval_may_match, json_stat
+from .loader import MICROS_TIMESTAMPS, conf_override, local_frame, struct_of
 
 # schemas of the driver-built frames (local_frame), built once
 _RT_MAP = struct_of(("__rt_path", T.StringType()), ("__rt_base", T.LongType()),
@@ -1064,60 +1064,31 @@ def delta_changes(
 def _file_stats_json(full: str) -> str | None:
     """Per-file statistics for the add action's ``stats`` field (the
     Delta spec's data-skipping payload): numRecords, minValues,
-    maxValues, nullCount -- aggregated from the parquet FOOTER's
-    row-group statistics (no data read). Timestamps/dates serialize as
-    fixed-width ISO strings, so lexicographic compare = chronological
-    (what the skipping reader relies on). Columns without footer stats
-    are simply absent (absent = unknown = never prune)."""
-    import datetime as _dt
-
-    import pyarrow.parquet as papq
-
-    def _js(v):
-        if isinstance(v, _dt.datetime):
-            return v.strftime("%Y-%m-%dT%H:%M:%S.%f")
-        if isinstance(v, _dt.date):
-            return v.isoformat()
-        if isinstance(v, bytes):
-            return None  # binary min/max not representable in JSON stats
-        return v
+    maxValues, nullCount -- from the parquet FOOTER (``footer_ranges``,
+    no data read), values encoded by ``json_stat`` (timestamps/dates as
+    fixed-width ISO strings, so lexicographic compare = chronological,
+    what the skipping reader relies on). A column whose range is
+    unknown (``footer_ranges``' rule) is absent from minValues/maxValues,
+    and one without a full null count is absent from nullCount: absent =
+    unknown = never prune."""
+    import pyarrow as pa
 
     try:
-        md = papq.ParquetFile(full).metadata
-    except Exception:
+        num_rows, ranges = footer_ranges(full)
+    except (OSError, pa.ArrowException):  # unreadable footer: no stats
         return None
     mins: dict = {}
     maxs: dict = {}
     nulls: dict = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if "." in name:
-                continue  # nested leaves: skip (top-level skipping only)
-            st = col.statistics
-            if st is None:
-                continue
-            if st.null_count is not None:
-                nulls[name] = nulls.get(name, 0) + int(st.null_count)
-            if not st.has_min_max:
-                continue
-            try:
-                mn, mx = _js(st.min), _js(st.max)
-            except Exception:
-                # pyarrow can't decode stats for every physical type
-                # (e.g. decimal128): absent = unknown = never prune
-                continue
-            if mn is None or mx is None:
-                continue
-            if name not in mins or mn < mins[name]:
-                mins[name] = mn
-            if name not in maxs or mx > maxs[name]:
-                maxs[name] = mx
+    for name, (lo, hi, n) in ranges.items():
+        lo, hi = json_stat(lo), json_stat(hi)
+        if lo is not None and hi is not None:
+            mins[name], maxs[name] = lo, hi
+        if n is not None:
+            nulls[name] = n
     return json.dumps(
         {
-            "numRecords": md.num_rows,
+            "numRecords": num_rows,
             "minValues": mins,
             "maxValues": maxs,
             "nullCount": nulls,
@@ -1131,22 +1102,14 @@ def _write_data_files(df: DataFrame, table: str, partition_by: list[str]) -> lis
     ``stats`` harvested from the parquet footers."""
     sub = f"part-{uuid.uuid4().hex[:12]}"
     staging = os.path.join(table, sub)
-    spark = df.sparkSession
     # INT96 (Spark's default ltz encoding) carries NO parquet min/max
     # statistics -- modern Delta writers emit INT64 micros, which is also
     # what makes timestamp data skipping possible
-    prev_tst = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
+    with conf_override(df.sparkSession, MICROS_TIMESTAMPS):
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(staging)
-    finally:
-        if prev_tst is None:
-            spark.conf.unset("spark.sql.parquet.outputTimestampType")
-        else:
-            spark.conf.set("spark.sql.parquet.outputTimestampType", prev_tst)
     adds = []
     now = int(time.time() * 1000)
     for root, _dirs, names in os.walk(staging):

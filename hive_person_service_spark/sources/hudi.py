@@ -77,7 +77,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..operators.skipping import interval_may_match
+from ..operators.skipping import footer_ranges, interval_may_match, json_stat
 from .avro_ocf import (
     _decoder,
     _encoder,
@@ -85,7 +85,7 @@ from .avro_ocf import (
     _records_to_pdf,
     spark_to_avro_schema,
 )
-from .loader import local_frame, struct_of
+from .loader import MICROS_TIMESTAMPS, conf_override, local_frame, struct_of
 
 # ---------------------------------------------------------------------------
 # constants (public layout names)
@@ -405,73 +405,49 @@ def _load_column_stats(table: str) -> dict | None:
         return json.load(fh)
 
 
-def _json_stat(v):
-    """One min/max value as a JSON-safe scalar: ints/floats/bools pass
-    through, date/datetime serialize ISO (fixed-width, so lexicographic
-    compare = chronological), bytes are unindexable (None)."""
+def _base_file_column_stats(full: str) -> dict:
+    """Per-column {min, max, nulls} for one base parquet, from its FOOTER
+    (``footer_ranges``, no data read) -- the same payload real Hudi's
+    metadata-table ``column_stats`` partition holds per (file, column),
+    values encoded by ``json_stat``. Meta columns are skipped; a column
+    whose range is unknown (``footer_ranges``' rule, or a type
+    ``json_stat`` cannot encode) records min = max = None, which pruning
+    never acts on."""
+    _num_rows, ranges = footer_ranges(full)
+    return {
+        name: {"min": json_stat(lo), "max": json_stat(hi), "nulls": nulls}
+        for name, (lo, hi, nulls) in ranges.items()
+        if not name.startswith("_hoodie_")
+    }
+
+
+def _temporal_fields(schema: dict) -> dict:
+    """{field: converter} for the avro fields of logical type
+    timestamp-micros or date: their decoded longs/ints become UTC-naive
+    datetimes and dates, so log stats encode like base-file stats."""
     import datetime as _dt
 
-    if v is None or isinstance(v, (bool, int, float, str)):
-        return v
-    if isinstance(v, _dt.datetime):
-        return v.isoformat(sep="T", timespec="microseconds")
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    return None
-
-
-def _base_file_column_stats(full: str) -> dict:
-    """Per-column {min, max, nulls, n} for one base parquet, aggregated
-    from the FOOTER's row-group statistics (no data read) -- the same
-    payload real Hudi's metadata-table ``column_stats`` partition holds
-    per (file, column). Meta columns are skipped; a column whose footer
-    carries no stats is simply absent (absent = unknown = never prune)."""
-    import pyarrow.parquet as papq
-
-    pf = papq.ParquetFile(full)
-    agg: dict[str, dict] = {}
-    n_rows = pf.metadata.num_rows
-    for rg in range(pf.metadata.num_row_groups):
-        for ci in range(pf.metadata.num_columns):
-            col = pf.metadata.row_group(rg).column(ci)
-            name = col.path_in_schema
-            if "." in name or name.startswith("_hoodie_"):
-                continue  # nested leaf or meta column: not indexed
-            st = col.statistics
-            if st is None:
-                continue
-            cur = agg.setdefault(
-                name, {"min": None, "max": None, "nulls": 0, "n": n_rows}
-            )
-            if st.null_count is not None:
-                cur["nulls"] += st.null_count
-            if not st.has_min_max:
-                # one stats-less row group poisons the whole file's
-                # range: record unknown (None) permanently
-                cur["min"] = cur["max"] = None
-                cur["n"] = -1  # sentinel: range unusable
-                continue
-            lo, hi = _json_stat(st.min), _json_stat(st.max)
-            if cur.get("n") == -1 or lo is None or hi is None:
-                cur["min"] = cur["max"] = None
-                cur["n"] = -1
-                continue
-            cur["min"] = lo if cur["min"] is None else min(cur["min"], lo)
-            cur["max"] = hi if cur["max"] is None else max(cur["max"], hi)
-    # drop the bookkeeping sentinel: a poisoned range is already
-    # (min=None, max=None) = unknown, which pruning never acts on
+    epoch = _dt.datetime(1970, 1, 1)
+    conv = {
+        "timestamp-micros": lambda v: epoch + _dt.timedelta(microseconds=v),
+        "date": lambda v: epoch.date() + _dt.timedelta(days=v),
+    }
     return {
-        c: {"min": st["min"], "max": st["max"], "nulls": st["nulls"]}
-        for c, st in agg.items()
+        f["name"]: conv[b["logicalType"]]
+        for f in schema.get("fields", [])
+        for b in (f["type"] if isinstance(f["type"], list) else [f["type"]])
+        if isinstance(b, dict) and b.get("logicalType") in conv
     }
 
 
 def _log_file_column_stats(full: str) -> dict:
     """Column stats for one MOR log file, computed from its decoded
     block payloads: AVRO_DATA blocks contribute per-column min/max over
-    their records; a log holding ONLY delete blocks carries no values at
-    all and records the explicit ``__no_data__`` marker so pruning can
-    treat it as unable to match any predicate."""
+    their records, encoded by ``json_stat`` like base-file stats (an
+    unencodable value makes the range unknown); a log holding ONLY
+    delete blocks carries no values at all and records the explicit
+    ``__no_data__`` marker so pruning can treat it as unable to match any
+    predicate."""
     with open(full, "rb") as fh:
         blob = fh.read()
     agg: dict[str, dict] = {}
@@ -483,6 +459,7 @@ def _log_file_column_stats(full: str) -> dict:
         if schema.get("name") == "HoodieDeleteRecord":
             continue  # delete payloads carry keys, not values
         saw_data = True
+        temporal = _temporal_fields(schema)
         for rec in _decode_avro_data(content, schema):
             for name, v in rec.items():
                 if name.startswith("_hoodie_"):
@@ -490,7 +467,9 @@ def _log_file_column_stats(full: str) -> dict:
                 cur = agg.setdefault(
                     name, {"min": None, "max": None, "nulls": 0}
                 )
-                jv = _json_stat(v)
+                if v is not None and name in temporal:
+                    v = temporal[name](v)
+                jv = json_stat(v)
                 if v is None:
                     cur["nulls"] += 1
                 elif jv is None:
@@ -572,26 +551,25 @@ def _column_stats_add(table: str, write_stats: list[dict]) -> None:
 
 
 def _parse_iso_dt(s):
-    """Parse an ISO date/datetime string (``_json_stat``'s output shape,
-    space- or T-separated) to a datetime, promoting plain dates to
-    midnight so mixed-timespec bounds stay mutually comparable. Returns
-    None when the string isn't ISO temporal."""
+    """Parse an ISO date/datetime string (``json_stat``'s output shape,
+    space- or T-separated) to a UTC-naive datetime, promoting plain dates
+    to midnight so mixed-timespec bounds stay mutually comparable. An
+    offset-aware value (a literal, or a bound an older writer stored with
+    its ``+00:00``) converts to UTC. None when it isn't ISO temporal."""
     import datetime as _dt
 
-    if isinstance(s, _dt.datetime):
-        return s
-    if isinstance(s, _dt.date):
+    if isinstance(s, str):
+        try:
+            s = _dt.datetime.fromisoformat(s.replace(" ", "T", 1))
+        except ValueError:
+            return None
+    elif isinstance(s, _dt.date) and not isinstance(s, _dt.datetime):
         return _dt.datetime(s.year, s.month, s.day)
-    if not isinstance(s, str):
+    if not isinstance(s, _dt.datetime):
         return None
-    t = s.replace(" ", "T", 1)
-    try:
-        if "T" in t:
-            return _dt.datetime.fromisoformat(t)
-        d = _dt.date.fromisoformat(t)
-        return _dt.datetime(d.year, d.month, d.day)
-    except ValueError:
-        return None
+    if s.tzinfo is not None:
+        s = s.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    return s
 
 
 def _stats_may_match(entry: dict | None, skip_filters: list[tuple]) -> bool:
@@ -1132,12 +1110,9 @@ def _write_base_files(df_meta: DataFrame, table: str, instant: str,
         ),
         F.lit(f"-0000-0000-000000000000-0_{_WRITE_TOKEN}_{instant}.parquet"),
     )
-    spark = df_meta.sparkSession
     # INT96 (Spark's default) kills footer stats and round-trips as ns
     # through Arrow; real Hudi base files carry INT64 micros
-    prev_tst = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
+    with conf_override(df_meta.sparkSession, MICROS_TIMESTAMPS):
         staged = (
             df_meta.withColumn("_hoodie_file_name", fname)
             # _hp duplicates the partition path because partitionBy
@@ -1155,11 +1130,6 @@ def _write_base_files(df_meta: DataFrame, table: str, instant: str,
             .partitionBy("_hp", "_hoodie_bucket")
             .parquet(staging)
         )
-    finally:
-        if prev_tst is None:
-            spark.conf.unset("spark.sql.parquet.outputTimestampType")
-        else:
-            spark.conf.set("spark.sql.parquet.outputTimestampType", prev_tst)
     stats = []
     for pdir in sorted(os.listdir(staging)):
         if not pdir.startswith("_hp="):

@@ -105,8 +105,9 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..operators.skipping import footer_ranges
 from .avro_ocf import read_ocf, write_ocf
-from .loader import local_frame, struct_of
+from .loader import conf_override, local_frame, struct_of
 
 # schemas of the driver-built frames (local_frame), built once
 _PATH_MAP = struct_of(("file_path", T.StringType()), ("plain", T.StringType()))
@@ -1421,40 +1422,21 @@ def _footer_bounds(
     path: str, name_to_id: dict[str, int], types_by_name: dict[str, str]
 ) -> tuple[int, list[dict], list[dict]]:
     """(record_count, lower_bounds, upper_bounds) from the parquet FOOTER
-    only -- row-group statistics aggregated per column, values encoded
-    with the spec's single-value serialization. Columns without stats
-    (or all-null) are simply absent (the reader treats absent as
-    unknown = never prune)."""
-    import pyarrow.parquet as papq
-
+    only (``footer_ranges``), values encoded with the spec's single-value
+    serialization. A column whose range is unknown (``footer_ranges``'
+    rule) is absent, which the reader treats as never prune."""
     from .iceberg_transforms import canonical, sv_encode
 
-    md = papq.ParquetFile(path).metadata
-    lo: dict[str, object] = {}
-    hi: dict[str, object] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            st = col.statistics
-            if st is None or not st.has_min_max or name not in name_to_id:
-                continue
-            t = types_by_name[name]
-            mn, mx = canonical(st.min, t), canonical(st.max, t)
-            if name not in lo or mn < lo[name]:
-                lo[name] = mn
-            if name not in hi or mx > hi[name]:
-                hi[name] = mx
-    lower = [
-        {"field_id": name_to_id[n], "value": sv_encode(v, types_by_name[n])}
-        for n, v in sorted(lo.items())
-    ]
-    upper = [
-        {"field_id": name_to_id[n], "value": sv_encode(v, types_by_name[n])}
-        for n, v in sorted(hi.items())
-    ]
-    return md.num_rows, lower, upper
+    num_rows, ranges = footer_ranges(path)
+    lower, upper = [], []
+    for name, (lo, hi, _nulls) in sorted(ranges.items()):
+        if lo is None or name not in name_to_id:
+            continue
+        t = types_by_name[name]
+        fid = name_to_id[name]
+        lower.append({"field_id": fid, "value": sv_encode(canonical(lo, t), t)})
+        upper.append({"field_id": fid, "value": sv_encode(canonical(hi, t), t)})
+    return num_rows, lower, upper
 
 
 def _write_parquet_files(
@@ -1492,19 +1474,13 @@ def _write_parquet_files(
             )
             for f in spec_fields
         }
-    spark = df.sparkSession
-    prev_fid = spark.conf.get("spark.sql.parquet.fieldId.write.enabled", None)
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    try:
+    with conf_override(
+        df.sparkSession, {"spark.sql.parquet.fieldId.write.enabled": "true"}
+    ):
         w = df.write.mode("overwrite")
         if part_names:
             w = w.partitionBy(*part_names)
         w.parquet(sub)
-    finally:
-        if prev_fid is None:
-            spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
-        else:
-            spark.conf.set("spark.sql.parquet.fieldId.write.enabled", prev_fid)
     out = []
     for root, _dirs, names in os.walk(sub):
         for n in names:

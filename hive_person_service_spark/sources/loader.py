@@ -15,6 +15,8 @@ Scale notes:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 import pandas as pd
 import pyarrow as pa
@@ -101,6 +103,28 @@ def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
             schema=arrow_schema,
         )
     return spark.createDataFrame(table, schema=schema)
+
+
+#: Parquet timestamps as INT64 micros: Spark's default INT96 carries no
+#: footer min/max, so no timestamp skipping stats.
+MICROS_TIMESTAMPS = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+
+
+@contextmanager
+def conf_override(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set session ``confs`` for the ``with`` body, then put back what was
+    there before (unset where nothing was set), also when the body raises."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
